@@ -25,6 +25,13 @@ private final class TaskMetricsListener
 }
 
 object Bench {
+  /** Absolute s/query mean above which a per-query map counts as
+    * contended, whatever its median says (uniform contention inflates
+    * the median WITH the mean, blinding the relative test). The
+    * write-time gate below and SuiteTimeLintSpec's disarm read this
+    * one value. */
+  val contendedMeanCeiling = 1.75
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -250,9 +257,10 @@ object Bench {
     // quiet record survives. Same formula as SuiteTimeLintSpec so the
     // two can never disagree about a map already written.
     // Two independent signals, either quarantines the sweep:
-    // (a) mean hot relative to the median-implied machine speed (the
-    //     lint's formula — catches sustained co-tenancy that fattens
-    //     the tail), and
+    // (a) the lint's formula: mean hot relative to the median-implied
+    //     machine speed (catches sustained co-tenancy that fattens
+    //     the tail) or above the absolute ceiling (catches uniform
+    //     contention), and
     // (b) hypervisor steal over the timed loop (catches the BURST
     //     shape (a) misses: this box's r16 crater inflated ~15
     //     alphabetically-adjacent queries 5-10× while the suite
@@ -266,21 +274,22 @@ object Bench {
     val contended = (okTimes.nonEmpty && {
       val mean = okTimes.sum / okTimes.size
       val med = okTimes.sorted.apply(okTimes.size / 2)
-      mean > 1.15 * (med / 0.65)
+      mean > 1.15 * (med / 0.65) || mean > contendedMeanCeiling
     }) || stealFrac > 0.03
     if (fileOfRecord) {
+      // a reduced-width run keeps its width in the name, contended or
+      // not, so it never overwrites a full-width artifact
+      val width = if (fullWidth) "" else s"_c$cpus"
       val name =
-        if (contended) "BENCH_LOCAL_contended.json"
-        else if (!fullWidth) s"BENCH_LOCAL_c$cpus.json"
-        else "BENCH_LOCAL.json"
+        if (contended) s"BENCH_LOCAL_contended$width.json"
+        else s"BENCH_LOCAL$width.json"
       if (contended)
-        System.err.println("[bench] contention detected (mean-vs-median " +
-          f"or steal ${100 * stealFrac}%.1f%%) — writing " +
-          "BENCH_LOCAL_contended.json and keeping the existing quiet " +
-          "file of record")
+        System.err.println("[bench] contention detected (mean vs " +
+          f"median or ceiling, or steal ${100 * stealFrac}%.1f%%) — " +
+          s"writing $name and keeping the existing quiet file of record")
       else if (!fullWidth)
         System.err.println(s"[bench] reduced-width run (cpus=$cpus) — " +
-          s"writing BENCH_LOCAL_c$cpus.json, not the file of record")
+          s"writing $name, not the file of record")
       try java.nio.file.Files.writeString(
         java.nio.file.Paths.get(sys.props("user.dir"), name),
         jsonLine(qmap(identity), total, identity, memMaps) + "\n")

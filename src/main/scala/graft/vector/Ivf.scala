@@ -69,7 +69,10 @@ object Ivf {
     * must pass dyadicMeans = true. */
   def fit(corpus: DataFrame, idCol: String, vecCol: String,
       cells: Int, iters: Int = 2, dyadicMeans: Boolean = false): Model = {
+    // null vectors (no cell — SemDedup keeps them cell-less) never seed
+    // a centroid; they add nothing to the means either
     var cents: IndexedSeq[Array[Double]] = corpus
+      .filter(col(vecCol).isNotNull)
       .orderBy(col(idCol)).limit(cells)
       .select(col(vecCol)).collect()
       .map(_.getSeq[Number](0).map(_.doubleValue).toArray).toIndexedSeq

@@ -51,8 +51,8 @@ object SemDedup {
   }
 
   /** Kept manifest: (idCol, primary cell) for every vector that
-    * survives. One fit, one assignment scan, one equi-join on cell,
-    * one anti-join. */
+    * survives; a null vector survives with a null cell. One fit, one
+    * assignment scan, one equi-join on cell, one anti-join. */
   def keep(df: DataFrame, idCol: String, vecCol: String, cells: Int,
       threshold: Double, probes: Int = 2): DataFrame = {
     val model = Ivf.fit(df, idCol, vecCol, cells, iters = 1)
@@ -64,12 +64,15 @@ object SemDedup {
     // whole corpus just to recover a column this frame already had.
     val assigned = df.select(col(idCol), col(vecCol).as("c_vec"),
         sqrt(dotExact(col(vecCol), col(vecCol))).as("c_norm"),
-        posexplode(Ivf.probeCells(col(vecCol), model, probes))
+        // _outer: a null vector has no cells but stays in the manifest
+        // (one row, null cpos and cell) — it can pair with nothing, so
+        // it is never dropped, and never silently lost either
+        posexplode_outer(Ivf.probeCells(col(vecCol), model, probes))
           .as(Seq("cpos", "cell")))
       .localCheckpoint()
     val dropped = pairs(assigned, idCol, threshold)
       .select(col("id_b").as(idCol)).distinct()
-    assigned.filter(col("cpos") === 0)
+    assigned.filter(col("cpos") === 0 || col("cpos").isNull)
       .join(dropped, Seq(idCol), "left_anti")
       .select(col(idCol), col("cell"))
   }

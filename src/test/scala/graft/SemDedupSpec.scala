@@ -52,6 +52,24 @@ class SemDedupSpec extends SparkSuite {
     assert(recall >= 0.6, f"recall $recall%.3f below bound")
   }
 
+  test("a null vector stays in the keep manifest with a null cell") {
+    // the lowest id, so it would also be the first IVF seed if the fit
+    // did not skip null vectors
+    val nullRow = spark.range(1).select(lit(-1L).as("vec_id"),
+      lit(null).cast(emb.schema("embedding").dataType).as("embedding"))
+    val corpus = emb.select($"vec_id", $"embedding").union(nullRow)
+    def manifest(df: org.apache.spark.sql.DataFrame) =
+      SemDedup.keep(df, "vec_id", "embedding",
+        cells = 8, threshold = threshold, probes = 3)
+        .select($"vec_id", $"cell".cast("long"))
+        .as[(Long, Option[Long])].collect().sorted.toSeq
+    val got = manifest(corpus)
+    assert(got.count(_._1 == -1L) === 1)
+    assert(got.find(_._1 == -1L).get._2.isEmpty, "null vector has no cell")
+    // the non-null vectors' manifest is unchanged by the null row
+    assert(got.filterNot(_._1 == -1L) === manifest(emb))
+  }
+
   test("deterministic: two runs produce the identical keep manifest") {
     def run() = SemDedup.keep(emb, "vec_id", "embedding",
       cells = 8, threshold = threshold, probes = 3)
