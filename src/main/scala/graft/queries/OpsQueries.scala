@@ -862,8 +862,7 @@ object OpsQueries {
     // COUNT(*)/MIN/MAX(event_id) over the re-sharded log are served
     // from the `.meta` sidecars alone (complete pushdown, zero shards
     // opened — GraftLogSourceSpec pins filesOpened == 0, and the
-    // pushdown self-disables on residual filters or a missing
-    // sidecar). At 100 TB this is a manifest read instead of a full
+    // pushdown self-disables on any filter or a missing sidecar). At 100 TB this is a manifest read instead of a full
     // scan. The oracle replays the same numbers from the parquet
     // events table, so write→sidecar→pushdown is value-exact.
     "q159_graftlog_stats" -> ((s, dir) => {

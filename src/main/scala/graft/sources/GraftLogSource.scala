@@ -65,9 +65,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * one shard per file, one InputPartition per shard (splittability
   * would follow parquet's row-group model; shards are written
   * bounded instead — the [[GraftLog.write]] helper caps rows per
-  * shard). Filters are also re-applied by Spark above the scan
-  * (pushFilters returns them as residuals), so pruning is purely an
-  * I/O optimization and can never change results.
+  * shard). A plain batch read answers its event_id comparisons
+  * exactly (the readers drop out-of-range lines, so Spark plans no
+  * Filter for them); every other filter, and every filter of a
+  * row-level rewrite or change-feed scan, is re-applied by Spark
+  * above the scan, so for those pruning is purely an I/O
+  * optimization.
   */
 class GraftLogSource extends TableProvider {
   private def bucketed(path: String, opts: util.Map[String, String]): Boolean =
@@ -582,12 +585,17 @@ object GraftLog {
       case b: Byte => Some(b.toLong)
       case _ => None
     }
+    // a strict bound past either end of the Long range is the empty
+    // interval (lo > hi), never a wrap-around to the whole table
+    val empty = (Long.MaxValue, Long.MinValue)
     filters.foldLeft(Option((Long.MinValue, Long.MaxValue))) {
       case (None, _) => None
       case (Some((lo, hi)), f) => f match {
-        case LessThan("event_id", v) => num(v).map(x => (lo, hi.min(x - 1)))
+        case LessThan("event_id", v) => num(v).map(x =>
+          if (x == Long.MinValue) empty else (lo, hi.min(x - 1)))
         case LessThanOrEqual("event_id", v) => num(v).map(x => (lo, hi.min(x)))
-        case GreaterThan("event_id", v) => num(v).map(x => (lo.max(x + 1), hi))
+        case GreaterThan("event_id", v) => num(v).map(x =>
+          if (x == Long.MaxValue) empty else (lo.max(x + 1), hi))
         case GreaterThanOrEqual("event_id", v) =>
           num(v).map(x => (lo.max(x), hi))
         case EqualTo("event_id", v) => num(v).map(x => (lo.max(x), hi.min(x)))
@@ -1840,7 +1848,8 @@ object GraftLog {
     * degrades to "readable, unprunable" — never wrong rows — until
     * [[buildIndex]] runs again. Index files of vanished shards are
     * inert for the same reason. Pruning is an I/O optimization only:
-    * every filter stays a residual Spark re-applies row-level.
+    * a filter on an indexed column stays a residual Spark re-applies
+    * row-level.
     *
     * Scale shape: building is one distributed pass grouped by the
     * `_shard` metadata column, with index files written FROM THE
@@ -1931,6 +1940,60 @@ object GraftLog {
       Some(org.apache.spark.sql.catalyst.util.DateTimeUtils
         .fromJavaDate(d).toLong)
     case _ => None
+  }
+
+  /** A top-level comparison of event_id against a Long — the filter
+    * shapes a plain batch scan answers exactly (sidecar pruning plus
+    * the readers' per-line key check), so Spark plans no residual
+    * Filter for them. */
+  private[sources] def isKeyBound(f: Filter): Boolean = f match {
+    case EqualTo("event_id", _: Long) | GreaterThan("event_id", _: Long) |
+        GreaterThanOrEqual("event_id", _: Long) |
+        LessThan("event_id", _: Long) |
+        LessThanOrEqual("event_id", _: Long) => true
+    case _ => false
+  }
+
+  /** The inclusive event_id interval [lo, hi] the key bounds among
+    * `filters` admit; lo > hi is the empty interval. A strict bound
+    * past the end of the Long range (`> Long.MaxValue`,
+    * `< Long.MinValue`) admits nothing rather than wrapping around. */
+  private[sources] def keyBounds(filters: Seq[Filter]): (Long, Long) = {
+    var lo = Long.MinValue
+    var hi = Long.MaxValue
+    var empty = false
+    filters.foreach {
+      case EqualTo("event_id", v: Long) =>
+        lo = math.max(lo, v); hi = math.min(hi, v)
+      case GreaterThan("event_id", v: Long) =>
+        if (v == Long.MaxValue) empty = true else lo = math.max(lo, v + 1)
+      case GreaterThanOrEqual("event_id", v: Long) => lo = math.max(lo, v)
+      case LessThan("event_id", v: Long) =>
+        if (v == Long.MinValue) empty = true else hi = math.min(hi, v - 1)
+      case LessThanOrEqual("event_id", v: Long) => hi = math.min(hi, v)
+      case _ => ()
+    }
+    if (empty) (Long.MaxValue, Long.MinValue) else (lo, hi)
+  }
+
+  /** One read's view of a table, each part fetched at most once: the
+    * shard listing between two snapshot tokens, the generation the
+    * read resolves at (what deletion-vector visibility keys on — a
+    * token minted before a dv commit reads the suppressed rows; the
+    * head reads without them), and the vectors governing the listed
+    * shards (shard name → dv file). A scan builder and the scan it
+    * builds share one view, so pushdown acceptance, statistics,
+    * partitioning, ordering and partition planning all see the same
+    * snapshot, and a key lookup pays one listing instead of one per
+    * planning step. */
+  private[sources] final class ReadView(path: String,
+      since: Option[String], asOf: Option[String]) {
+    lazy val shards: Seq[ShardInfo] = shardsBetween(path, since, asOf)
+    lazy val gen: Long =
+      asOf.map(t => tokenOrd(t)._1).getOrElse(generation(path))
+    lazy val dvs: Map[String, String] = dvMap(path, shards, gen)
+    def dvOf(s: ShardInfo): Option[String] =
+      dvs.get(Paths.get(s.file).getFileName.toString)
   }
 
   /** The single attribute a comparison filter constrains (the only
@@ -2528,8 +2591,8 @@ object GraftLog {
     *    all price shards by PHYSICAL row counts — every pushdown that
     *    consumes counts self-disables while the read's exact shard
     *    set carries a vector (the ScanBuilder's echo-validated
-    *    `dvFree` / [[dvMap]] check at acceptance, re-verified at
-    *    plan time);
+    *    `dvFree` / [[dvMap]] check at acceptance, over the same
+    *    [[ReadView]] the scan then plans from);
     *  - range DELETE's partial-shard rewrite applies the shard's
     *    valid dv to the kept lines (a rewrite must not resurrect
     *    suppressed rows);
@@ -2700,11 +2763,18 @@ object GraftLog {
     * [[shardsRewritten]]): dv files written by [[deleteVectors]]. */
   val dvFilesWritten = new AtomicLong(0)
 
-  /** Executor-side row visibility under a [[DvRef]]: suppress-mode
-    * hides the listed keys; keep-mode shows ONLY `file`'s keys minus
-    * `minus`'s (the change feed's dv delta). Keys load once per task
-    * (a dv is a few KB); probes are binary searches. */
-  private[sources] final class DvFilter(ref: Option[DvRef])
+  /** Executor-side row visibility by key: the scan's exact event_id
+    * interval [lo, hi] (the key bounds it consumed from Spark) and
+    * its shard's [[DvRef]] — suppress-mode hides the listed keys;
+    * keep-mode shows ONLY `file`'s keys minus `minus`'s (the change
+    * feed's dv delta). Keys load once per task (a dv is a few KB);
+    * probes are binary searches. The key is the line's first field,
+    * so `admits` needs no full parse and works whether or not
+    * event_id survives column pruning; an out-of-range line is
+    * skipped, never taken as the end of a shard, so results do not
+    * lean on the within-shard sort contract. */
+  private[sources] final class KeyFilter(ref: Option[DvRef],
+      lo: Long = Long.MinValue, hi: Long = Long.MaxValue)
       extends Serializable {
     private val (only, drop): (Array[Long], Array[Long]) = ref match {
       case None => (null, null)
@@ -2714,10 +2784,15 @@ object GraftLog {
         (dvKeys(f).filter(k =>
           java.util.Arrays.binarySearch(m, k) < 0), null)
     }
-    val active: Boolean = only != null || drop != null
+    private val bounded = lo != Long.MinValue || hi != Long.MaxValue
+    val active: Boolean = only != null || drop != null || bounded
     def visible(id: Long): Boolean =
-      (drop == null || java.util.Arrays.binarySearch(drop, id) < 0) &&
+      id >= lo && id <= hi &&
+        (drop == null || java.util.Arrays.binarySearch(drop, id) < 0) &&
         (only == null || java.util.Arrays.binarySearch(only, id) >= 0)
+    /** `visible` on a non-empty line's key prefix. */
+    def admits(line: String): Boolean =
+      !active || visible(line.substring(0, line.indexOf('|')).toLong)
   }
 
   /** Stage cumulative dv tmps for every live shard whose sidecar
@@ -4093,7 +4168,7 @@ class GraftLogTable(path: String, bucketed: Boolean = false,
       (!bucketed && GraftLog.deleteKeySet(filters).isDefined)
   override def deleteWhere(filters: Array[Filter]): Unit =
     GraftLog.deleteRange(filters) match {
-      case Some((lo, hi)) => GraftLog.deleteWhere(path, lo, hi)
+      case Some((lo, hi)) => if (lo <= hi) GraftLog.deleteWhere(path, lo, hi)
       case None => GraftLog.deleteKeySet(filters) match {
         case Some(keys) if !bucketed => GraftLog.deleteVectors(path, keys)
         case _ => throw new IllegalArgumentException(
@@ -4437,8 +4512,10 @@ class GraftLogBatchWrite(path: String, buckets: Option[Int] = None,
   * the DELETE fallback for conditions that do not fold to an
   * event_id range): Spark's group-based rewrite reads the AFFECTED
   * groups through [[newScanBuilder]] — the same sidecar pruning as
-  * any scan, so a selective condition touches few shards and the
-  * whole-group contract holds because filters stay residual (shard
+  * any scan, so a selective condition touches few shards; unlike a
+  * plain read, the rewrite scan (`wholeShards`) keeps even its key
+  * bounds as residuals and returns every row of each planned shard,
+  * which is the whole-group contract the swap relies on (shard
   * pruning is the only effect of pushdown) — computes the replacement
   * rows, and commits them through [[GraftLogReplaceBatchWrite]],
   * which swaps exactly the scanned shards for the newly written
@@ -4469,7 +4546,7 @@ class GraftLogRowLevelOperation(path: String,
     planGen = Some(GraftLog.generation(path))
     new GraftLogScanBuilder(path,
       StructType(GraftLog.schema.fields ++ GraftLog.extSchema(path)),
-      onPlan = files => affected = Some(files))
+      onPlan = files => affected = Some(files), wholeShards = true)
   }
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
     new WriteBuilder {
@@ -4517,7 +4594,8 @@ class GraftLogDeltaOperation(path: String,
       options: CaseInsensitiveStringMap): ScanBuilder = {
     planGen = Some(GraftLog.generation(path))
     new GraftLogScanBuilder(path,
-      StructType(GraftLog.schema.fields ++ GraftLog.extSchema(path)))
+      StructType(GraftLog.schema.fields ++ GraftLog.extSchema(path)),
+      wholeShards = true)
   }
   override def newWriteBuilder(
       info: LogicalWriteInfo): DeltaWriteBuilder =
@@ -5129,7 +5207,8 @@ class GraftLogScanBuilder(path: String,
     onPlan: Seq[String] => Unit = _ => (),
     changeFeed: Boolean = false,
     maxCommitsPerTrigger: Option[Int] = None,
-    ignoreDeletes: Boolean = false) extends ScanBuilder
+    ignoreDeletes: Boolean = false,
+    wholeShards: Boolean = false) extends ScanBuilder
     with SupportsPushDownFilters with SupportsPushDownRequiredColumns
     with SupportsPushDownAggregates
     with SupportsPushDownLimit with SupportsPushDownTopN {
@@ -5143,6 +5222,17 @@ class GraftLogScanBuilder(path: String,
   private var pushedLimit: Option[Int] = None
   private var pushedTopN: Option[(Boolean, Int)] = None // (ascending, n)
 
+  /** The read's listing and deletion vectors, shared with the scan. */
+  private val view = new GraftLog.ReadView(path, sinceVersion, version)
+
+  /** Whether the scan answers its event_id key bounds exactly. A
+    * row-level rewrite scan (`wholeShards`) must return every row of
+    * each planned shard — the commit swaps whole groups, so a rewrite
+    * that read only the matched rows would drop the rest — and a
+    * change feed tags rows per shard image; both keep every filter
+    * as a residual and use pushdown for shard pruning only. */
+  private val exactKeys = !wholeShards && !changeFeed
+
   /** A deletion vector governing ANY shard this read resolves
     * disables every pushdown that prices shards by sidecar ROW
     * COUNTS: counts are physical, visible rows may be fewer, so a
@@ -5153,13 +5243,9 @@ class GraftLogScanBuilder(path: String,
     * shard set at its resolved generation, so a compacted table
     * (vectors physically applied, files moved to the retired store)
     * gets its fast paths back immediately — only reads that actually
-    * see a vector pay. One `_dv` listing per plan. */
-  private lazy val dvFree: Boolean = {
-    val shards = GraftLog.shardsBetween(path, sinceVersion, version)
-    val g = version.map(t => GraftLog.tokenOrd(t)._1)
-      .getOrElse(GraftLog.generation(path))
-    GraftLog.dvMap(path, shards, g).isEmpty
-  }
+    * see a vector pay. The scan plans from the same view, so the set
+    * accepted here is the set it reads. */
+  private def dvFree: Boolean = view.dvs.isEmpty
 
   // both parent defaults return true; Scala requires the diamond be
   // resolved explicitly. PARTIAL is the contract here: Spark keeps
@@ -5174,11 +5260,13 @@ class GraftLogScanBuilder(path: String,
     * PARTIAL (`isPartiallyPushed` default true), so Spark keeps its
     * GlobalLimit above the scan and shard selection can never change
     * a result — it is purely "open 1 shard of 40 000". Refused under
-    * aggregate pushdown (the agg row is already O(1)); Spark itself
-    * never offers a limit while filters remain, and ours are always
-    * residuals. */
+    * aggregate pushdown (the agg row is already O(1)) and whenever a
+    * filter was pushed: Spark offers a limit once the scan consumed
+    * every filter (exact key bounds), but sidecar counts are rows
+    * BEFORE the filter, so shard selection would under-read. */
   override def pushLimit(limit: Int): Boolean =
-    !changeFeed && pushedAgg.isEmpty && limit > 0 && dvFree && {
+    !changeFeed && pushedAgg.isEmpty && pushed.isEmpty && limit > 0 &&
+      dvFree && {
       pushedLimit = Some(limit)
       true
     }
@@ -5192,10 +5280,12 @@ class GraftLogScanBuilder(path: String,
     * disjointness is verified against the sidecars — if an appended
     * log has overlapping ranges the scan silently reads everything
     * instead (partial pushdown: Spark's TakeOrderedAndProject above
-    * the scan makes selection an I/O optimization, never semantics). */
+    * the scan makes selection an I/O optimization, never semantics).
+    * Refused after a filter was pushed, for the same reason as
+    * [[pushLimit]]. */
   override def pushTopN(orders: Array[SortOrder], limit: Int): Boolean =
-    !changeFeed && pushedAgg.isEmpty && limit > 0 && dvFree &&
-      orders.length == 1 && {
+    !changeFeed && pushedAgg.isEmpty && pushed.isEmpty && limit > 0 &&
+      dvFree && orders.length == 1 && {
       orders(0).expression() match {
         case n: NamedReference if n.fieldNames.sameElements(Array("event_id")) =>
           pushedTopN =
@@ -5207,14 +5297,20 @@ class GraftLogScanBuilder(path: String,
 
   /** Accept comparisons on event_id (sidecar ranges) and on any
     * column carrying a secondary index (`_index/` — see
-    * [[GraftLog.buildIndex]]) for shard pruning; return EVERY filter
-    * as a residual so Spark re-applies them row-level — pruning stays
-    * an I/O optimization, never a semantics change. */
+    * [[GraftLog.buildIndex]]) for shard pruning. Key bounds
+    * ([[GraftLog.isKeyBound]]) are answered EXACTLY — the readers
+    * drop every line outside the interval — so they are not returned
+    * and Spark plans no Filter for them: the generated code then
+    * carries no key literal, and one compiled class serves every
+    * lookup. Everything else (OR, IN, IsNotNull, non-Long values,
+    * indexed non-key columns) stays a residual that Spark re-applies
+    * row-level, as does every filter of a rewrite or change-feed
+    * scan (see `exactKeys`). */
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
     lazy val idxCols = GraftLog.indexedColumns(path)
     pushed = filters.filter(f => GraftLog.filterAttr(f).exists(c =>
       c == "event_id" || idxCols(c)))
-    filters
+    if (exactKeys) filters.filterNot(GraftLog.isKeyBound) else filters
   }
   override def pushedFilters(): Array[Filter] = pushed
 
@@ -5228,10 +5324,9 @@ class GraftLogScanBuilder(path: String,
     * difference between a manifest read and a full scan). Accepted
     * only when it is safe to serve from stats:
     *
-    *  - no pushed/residual filters (Spark only offers aggregates
-    *    when ALL filters were consumed by the scan; ours are
-    *    residuals by design, so a filtered agg never reaches here —
-    *    defended anyway),
+    *  - no pushed filters (Spark offers aggregates once the scan
+    *    consumed every filter — pure key bounds — but sidecar stats
+    *    describe whole shards, not the filtered rows),
     *  - no GROUP BY (sidecars carry no per-group stats),
     *  - every aggregate is COUNT(*) / MIN / MAX of event_id,
     *  - every shard HAS a sidecar (a shard whose writer crashed
@@ -5263,8 +5358,7 @@ class GraftLogScanBuilder(path: String,
       // gate on the shards THIS scan will fold — a sidecar-less shard
       // outside a pinned snapshot/delta window must not disable the
       // fast path for a read that never touches it
-      GraftLog.shardsBetween(path, sinceVersion, version)
-        .forall(_.stats.isDefined)
+      view.shards.forall(_.stats.isDefined)
   }
 
   override def supportCompletePushDown(agg: Aggregation): Boolean =
@@ -5277,9 +5371,10 @@ class GraftLogScanBuilder(path: String,
     }
 
   override def build(): Scan =
-    new GraftLogScan(path, pushed, required, maxShardsPerTrigger, pushedAgg,
-      pushedLimit, pushedTopN, onPlan, version, sinceVersion, changeFeed,
-      maxCommitsPerTrigger, ignoreDeletes)
+    new GraftLogScan(path, view, pushed, exactKeys, required,
+      maxShardsPerTrigger, pushedAgg, pushedLimit, pushedTopN, onPlan,
+      version, sinceVersion, changeFeed, maxCommitsPerTrigger,
+      ignoreDeletes)
 }
 
 /** Observability at the DSv2 seam: per-task and driver-side custom
@@ -5307,7 +5402,11 @@ object GraftLogMetrics {
     Array(new ShardsReadMetric, new ShardsPrunedMetric)
 }
 
-class GraftLogScan(path: String, pushed: Array[Filter],
+/** `exactKeys`: the builder consumed the key bounds among `pushed`
+  * (Spark plans no Filter for them), so the readers must drop every
+  * line outside [[bounds]]; otherwise pushed filters only prune. */
+class GraftLogScan(path: String, view: GraftLog.ReadView,
+    pushed: Array[Filter], exactKeys: Boolean,
     required: StructType, maxShardsPerTrigger: Option[Int] = None,
     pushedAgg: Option[Seq[AggregateFunc]] = None,
     limit: Option[Int] = None,
@@ -5329,13 +5428,6 @@ class GraftLogScan(path: String, pushed: Array[Filter],
   private lazy val changes: Seq[(String, String, Option[GraftLog.DvRef])] =
     GraftLog.changeSet(path, sinceVersion.get, version)
 
-  /** The generation this read resolves at — what deletion-vector
-    * visibility keys on (a token minted before a dv commit reads the
-    * suppressed rows; the head reads without them). */
-  private lazy val resolvedGen: Long = version
-    .map(t => GraftLog.tokenOrd(t)._1)
-    .getOrElse(GraftLog.generation(path))
-
   override def supportedCustomMetrics():
       Array[org.apache.spark.sql.connector.metric.CustomMetric] =
     GraftLogMetrics.supported
@@ -5347,7 +5439,7 @@ class GraftLogScan(path: String, pushed: Array[Filter],
       Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] = {
     if (changeFeed)
       return Array(GraftLogMetrics.TaskMetric("shardsPruned", 0L))
-    val total = GraftLog.shardsBetween(path, sinceVersion, version).size
+    val total = view.shards.size
     val planned =
       if (pushedAgg.isDefined) 0
       else bucketGroups match {
@@ -5406,54 +5498,48 @@ class GraftLogScan(path: String, pushed: Array[Filter],
     case _ => () // unsupported runtime filter shapes: no pruning
   }
 
-  /** The pushed event_id interval [lo, hi] (inclusive). */
-  private def bounds: (Long, Long) = {
-    var lo = Long.MinValue
-    var hi = Long.MaxValue
-    pushed.foreach {
-      case EqualTo("event_id", v: Long) =>
-        lo = math.max(lo, v); hi = math.min(hi, v)
-      case GreaterThan("event_id", v: Long) => lo = math.max(lo, v + 1)
-      case GreaterThanOrEqual("event_id", v: Long) => lo = math.max(lo, v)
-      case LessThan("event_id", v: Long) => hi = math.min(hi, v - 1)
-      case LessThanOrEqual("event_id", v: Long) => hi = math.min(hi, v)
-      case _ => ()
+  /** The pushed event_id interval [lo, hi] (inclusive; lo > hi is
+    * empty). */
+  private lazy val bounds: (Long, Long) = GraftLog.keyBounds(pushed)
+
+  /** Shards surviving static bounds + secondary indexes, computed once
+    * per scan. A shard without a sidecar can never be pruned by its
+    * range (only an empty interval drops it); a shard whose index is
+    * stale (echo mismatch after an in-place rewrite) keeps scanning —
+    * the index only ever REMOVES provably-empty work, and indexed
+    * filters stay residuals. */
+  private lazy val staticLive: Seq[GraftLog.ShardInfo] = {
+    val (lo, hi) = bounds
+    if (lo > hi) Nil
+    else {
+      // pushed filters on indexed columns: load + validate each
+      // column's index map once per scan (O(#shards) small reads —
+      // the cost class the sidecar listing already pays)
+      val idxFilters = pushed.toSeq.flatMap(f =>
+        GraftLog.filterAttr(f).filter(_ != "event_id").map(c => (c, f)))
+      val idxByCol: Map[String, Map[String, GraftLog.ShardIndex]] =
+        idxFilters.map(_._1).distinct
+          .map(c => c -> GraftLog.loadIndexes(path, c, view.shards)).toMap
+      view.shards.filter { s =>
+        val name = Paths.get(s.file).getFileName.toString
+        val idxKeeps = !idxFilters.exists { case (c, f) =>
+          idxByCol(c).get(name).exists(GraftLog.idxProvesAbsent(_, f))
+        }
+        idxKeeps && s.stats.forall { case (mn, mx, _) => mx >= lo && mn <= hi }
+      }
     }
-    (lo, hi)
   }
 
-  /** Shards surviving static bounds + runtime-id pruning + secondary
-    * indexes. A shard without a sidecar can never be pruned; a shard
-    * whose index is stale (echo mismatch after an in-place rewrite)
-    * keeps scanning — the index only ever REMOVES provably-empty
-    * work, and every filter stays a residual. */
-  private def liveShards: Seq[GraftLog.ShardInfo] = {
-    val (lo, hi) = bounds
-    val listed = GraftLog.shardsBetween(path, sinceVersion, version)
-    // pushed filters on indexed columns: load + validate each
-    // column's index map once per scan (O(#shards) small reads — the
-    // cost class the sidecar listing already pays)
-    val idxFilters = pushed.toSeq.flatMap(f =>
-      GraftLog.filterAttr(f).filter(_ != "event_id").map(c => (c, f)))
-    val idxByCol: Map[String, Map[String, GraftLog.ShardIndex]] =
-      idxFilters.map(_._1).distinct
-        .map(c => c -> GraftLog.loadIndexes(path, c, listed)).toMap
-    listed.filter { s =>
-      val name = Paths.get(s.file).getFileName.toString
-      val idxKeeps = !idxFilters.exists { case (c, f) =>
-        idxByCol(c).get(name).exists(GraftLog.idxProvesAbsent(_, f))
-      }
-      idxKeeps && (s.stats match {
-        case None => true
-        case Some((mn, mx, _)) =>
-          mx >= lo && mn <= hi && runtimeIds.forall { ids =>
-            // any probe id inside [mn, mx]? (ids sorted: binary search)
-            val i = java.util.Arrays.binarySearch(ids, mn)
-            val from = if (i >= 0) i else -i - 1
-            from < ids.length && ids(from) <= mx
-          }
-      })
-    }
+  /** [[staticLive]] narrowed by the runtime ids — applied on every
+    * call, since `filter` can arrive after the static set is cached. */
+  private def liveShards: Seq[GraftLog.ShardInfo] = runtimeIds match {
+    case None => staticLive
+    case Some(ids) => staticLive.filter(_.stats.forall { case (mn, mx, _) =>
+      // any probe id inside [mn, mx]? (ids sorted: binary search)
+      val i = java.util.Arrays.binarySearch(ids, mn)
+      val from = if (i >= 0) i else -i - 1
+      from < ids.length && ids(from) <= mx
+    })
   }
 
   /** Post-pruning size/rows from the sidecars — what makes a
@@ -5477,8 +5563,7 @@ class GraftLogScan(path: String, pushed: Array[Filter],
       // sidecar counts are PHYSICAL rows; under deletion vectors the
       // visible count is lower, so report bytes only (numRows is a
       // planner estimate — unknown beats wrong)
-      if (live.forall(_.stats.isDefined) &&
-          GraftLog.dvMap(path, live, resolvedGen).isEmpty)
+      if (live.forall(_.stats.isDefined) && live.forall(view.dvOf(_).isEmpty))
         java.util.OptionalLong.of(live.map(_.stats.get._3).sum)
       else java.util.OptionalLong.empty()
     val bytes = live.map(_.bytes).sum
@@ -5629,21 +5714,12 @@ class GraftLogScan(path: String, pushed: Array[Filter],
     }
     pushedAgg match {
       case Some(aggs) =>
-        // metadata-only: fold the sidecars on the driver (O(#shards),
-        // same listing planInputPartitions already does) and emit the
+        // metadata-only: fold the sidecars on the driver and emit the
         // single final row from one empty-work partition — over the
         // SNAPSHOT's shard prefix when a version is pinned, so even
-        // the metadata-only path time-travels
-        val shards = GraftLog.shardsBetween(path, sinceVersion, version)
-        // the builder only accepts aggregate pushdown on a dv-free
-        // shard set; re-verify at plan time so a vector committed
-        // between the two (outside the single-structural-writer
-        // contract) fails loudly instead of overcounting
-        if (GraftLog.dvMap(path, shards, resolvedGen).nonEmpty)
-          throw new IllegalStateException(
-            s"graftlog $path grew a deletion vector between aggregate " +
-              "pushdown acceptance and planning — re-run the query")
-        val stats = shards.flatMap(_.stats)
+        // the metadata-only path time-travels. The builder accepted
+        // the pushdown on this same view's dv-free shard set.
+        val stats = view.shards.flatMap(_.stats)
         val values: Array[Option[Long]] = aggs.map {
           case _: CountStar => Some(stats.map(_._3).sum)
           case _: Min =>
@@ -5663,37 +5739,28 @@ class GraftLogScan(path: String, pushed: Array[Filter],
           val cap = headCap
           val tailCap = topN.collect { case (false, n) => n }
           val sel = selectedShards
-          // deletion vectors of the planned shards, resolved at the
-          // read's generation (one _dv listing — sidecar cost class);
-          // suppress-mode: the reader subtracts the keys
-          val dvs = GraftLog.dvMap(path, sel, resolvedGen)
-          // limit/top-n were accepted on a dv-free shard set (shard
-          // selection prices coverage with PHYSICAL sidecar counts);
-          // re-verify at plan time — mirroring the aggregate path —
-          // so a vector committed between pushdown acceptance and
-          // planning fails loudly instead of under-reading
-          if ((cap.nonEmpty || tailCap.nonEmpty) && dvs.nonEmpty)
-            throw new IllegalStateException(
-              s"graftlog $path grew a deletion vector between " +
-                "limit/top-n pushdown acceptance and planning — " +
-                "re-run the query")
           onPlan(sel.map(_.file))
+          // deletion vectors of the planned shards, resolved at the
+          // read's generation; suppress-mode: the reader subtracts
+          // the keys. Limit/top-n were accepted on this same view's
+          // dv-free shard set, so capped partitions never carry one.
           sel.map { s =>
-            val name = Paths.get(s.file).getFileName.toString
             GraftLogPartition(s.file, s.ub, cap, tailCap, None,
-              dvs.get(name).map(GraftLog.DvRef(_, keep = false)))
+              view.dvOf(s).map(GraftLog.DvRef(_, keep = false)))
               : InputPartition
           }.toArray
       }
     }
   }
 
-  override def createReaderFactory(): PartitionReaderFactory =
+  override def createReaderFactory(): PartitionReaderFactory = {
+    val (lo, hi) = if (exactKeys) bounds else (Long.MinValue, Long.MaxValue)
     // snapshot-resolved schema: a version/timestamp-travel read
     // parses its lines under the schema its snapshot was written
     // under (renames/drops/widenings resolve per generation)
     new GraftLogReaderFactory(required.fieldNames,
-      GraftLog.extColsAt(path, version))
+      GraftLog.extColsAt(path, version), lo, hi)
+  }
 }
 
 /** The one-row result of a completely-pushed aggregate (None = SQL
@@ -5918,8 +5985,11 @@ class GraftLogChangeFeedStream(path: String, required: StructType,
   override def stop(): Unit = ()
 }
 
+/** `lo`/`hi`: the inclusive event_id interval every reader keeps
+  * (a scan's exact key bounds; the full range otherwise). */
 class GraftLogReaderFactory(requiredCols: Array[String],
-    ext: Seq[GraftLog.ExtCol] = Nil)
+    ext: Seq[GraftLog.ExtCol] = Nil,
+    lo: Long = Long.MinValue, hi: Long = Long.MaxValue)
     extends PartitionReaderFactory {
 
   // resolved once on the driver, shipped to executors
@@ -5948,7 +6018,7 @@ class GraftLogReaderFactory(requiredCols: Array[String],
       PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
     partition match {
       case GraftLogPartition(file, ub, None, None, None, dv) =>
-        new GraftLogColumnarReader(file, refs, ub, dv)
+        new GraftLogColumnarReader(file, refs, ub, dv, lo, hi)
       case p => throw new IllegalStateException(
         s"no columnar reader for partition $p")
     }
@@ -5967,14 +6037,14 @@ class GraftLogReaderFactory(requiredCols: Array[String],
         override def close(): Unit = ()
       }
     case GraftLogPartition(file, ub, head, tail, change, dv) =>
-      val base = new GraftLogReader(file, refs, ub, change, dv)
+      val base = new GraftLogReader(file, refs, ub, change, dv, lo, hi)
       (head, tail) match {
         case (Some(n), _) => new GraftLogHeadReader(base, n)
         case (_, Some(n)) => new GraftLogTailReader(base, n)
         case _ => base
       }
     case GraftLogBucketPartition(files, ub) =>
-      new GraftLogBucketReader(files, refs, ub)
+      new GraftLogBucketReader(files, refs, ub, lo, hi)
   }
 }
 
@@ -6028,13 +6098,14 @@ class GraftLogTailReader(under: PartitionReader[InternalRow], n: Int)
 class GraftLogColumnarReader(file: String,
     refs: Array[GraftLog.ColRef],
     ub: Option[Long] = None,
-    dv: Option[GraftLog.DvRef] = None)
+    dv: Option[GraftLog.DvRef] = None,
+    lo: Long = Long.MinValue, hi: Long = Long.MaxValue)
     extends PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
   import org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
   import org.apache.spark.sql.vectorized.ColumnarBatch
 
   GraftLog.filesOpened.incrementAndGet()
-  private val dvf = new GraftLog.DvFilter(dv)
+  private val keys = new GraftLog.KeyFilter(dv, lo, hi)
   // retired-store fallback: a rewrite racing this scan moved the
   // file, not deleted it — the copy is bit-identical (see
   // GraftLog.openShardLines)
@@ -6059,9 +6130,7 @@ class GraftLogColumnarReader(file: String,
     var n = 0
     while (n < capacity && it.hasNext) {
       val line = it.next()
-      if (!line.isEmpty &&
-          (!dvf.active || dvf.visible(
-            line.substring(0, line.indexOf('|')).toLong))) {
+      if (!line.isEmpty && keys.admits(line)) {
         // limit -1 keeps trailing empties: an evolved string column
         // whose value is "" must not collapse into the exists-default
         val parts = line.split("\\|", -1)
@@ -6132,13 +6201,14 @@ class GraftLogColumnarReader(file: String,
 class GraftLogReader(file: String, refs: Array[GraftLog.ColRef],
     ub: Option[Long] = None,
     change: Option[String] = None,
-    dv: Option[GraftLog.DvRef] = None)
+    dv: Option[GraftLog.DvRef] = None,
+    lo: Long = Long.MinValue, hi: Long = Long.MaxValue)
     extends PartitionReader[InternalRow] {
   GraftLog.filesOpened.incrementAndGet()
 
   private val changeTag: UTF8String =
     change.map(UTF8String.fromString).orNull
-  private val dvf = new GraftLog.DvFilter(dv)
+  private val keys = new GraftLog.KeyFilter(dv, lo, hi)
 
   override def currentMetricsValues():
       Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
@@ -6152,49 +6222,47 @@ class GraftLogReader(file: String, refs: Array[GraftLog.ColRef],
     Paths.get(file).getFileName.toString)
 
   override def next(): Boolean = {
-    // loop (not recurse): a dv-delta partition may skip long runs of
-    // invisible lines
+    // loop (not recurse): a dv-delta partition or a key-bounded scan
+    // may skip long runs of invisible lines
     while (it.hasNext) {
       val line = it.next()
-      if (!line.isEmpty) {
+      if (!line.isEmpty && keys.admits(line)) {
         // limit -1 keeps trailing empties (empty-string evolved value)
         val parts = line.split("\\|", -1)
-        if (!dvf.active || dvf.visible(parts(0).toLong)) {
-          val values = new Array[Any](refs.length)
-          var i = 0
-          while (i < refs.length) {
-            values(i) = refs(i) match {
-              case GraftLog.LineCol(pos, dt, default) =>
-                // short line = pre-ALTER row → the exists default;
-                // an explicit NullToken is always NULL
-                if (pos >= parts.length) default
-                else if (pos >= 5 && parts(pos) == GraftLog.NullToken)
-                  null
-                else dt match {
-                  case LongType | TimestampType | TimestampNTZType =>
-                    parts(pos).toLong
-                  case DoubleType => parts(pos).toDouble
-                  case DateType => parts(pos).toInt
-                  case BooleanType => parts(pos).toBoolean
-                  case _ => UTF8String.fromString(parts(pos))
-                }
-              case GraftLog.UbCol => ub.getOrElse(
-                throw new IllegalStateException(
-                  s"projection asked for ub but shard $file has no " +
-                    "bucket sidecar"))
-              case GraftLog.ShardCol => shardName
-              case GraftLog.ChangeTypeCol =>
-                if (changeTag == null) throw new IllegalStateException(
-                  s"projection asked for _change_type but the partition " +
-                    s"over $file carries no change tag (not a " +
-                    "change-feed read)")
-                else changeTag
-            }
-            i += 1
+        val values = new Array[Any](refs.length)
+        var i = 0
+        while (i < refs.length) {
+          values(i) = refs(i) match {
+            case GraftLog.LineCol(pos, dt, default) =>
+              // short line = pre-ALTER row → the exists default;
+              // an explicit NullToken is always NULL
+              if (pos >= parts.length) default
+              else if (pos >= 5 && parts(pos) == GraftLog.NullToken)
+                null
+              else dt match {
+                case LongType | TimestampType | TimestampNTZType =>
+                  parts(pos).toLong
+                case DoubleType => parts(pos).toDouble
+                case DateType => parts(pos).toInt
+                case BooleanType => parts(pos).toBoolean
+                case _ => UTF8String.fromString(parts(pos))
+              }
+            case GraftLog.UbCol => ub.getOrElse(
+              throw new IllegalStateException(
+                s"projection asked for ub but shard $file has no " +
+                  "bucket sidecar"))
+            case GraftLog.ShardCol => shardName
+            case GraftLog.ChangeTypeCol =>
+              if (changeTag == null) throw new IllegalStateException(
+                s"projection asked for _change_type but the partition " +
+                  s"over $file carries no change tag (not a " +
+                  "change-feed read)")
+              else changeTag
           }
-          row = new GenericInternalRow(values)
-          return true
+          i += 1
         }
+        row = new GenericInternalRow(values)
+        return true
       }
     }
     false
@@ -6207,7 +6275,9 @@ class GraftLogReader(file: String, refs: Array[GraftLog.ColRef],
 /** A whole bucket: its shard files read back to back. */
 class GraftLogBucketReader(files: Seq[String],
     refs: Array[GraftLog.ColRef],
-    ub: Long) extends PartitionReader[InternalRow] {
+    ub: Long,
+    lo: Long = Long.MinValue, hi: Long = Long.MaxValue)
+    extends PartitionReader[InternalRow] {
   private val iter = files.iterator
   private var cur: GraftLogReader = _
   private var opened = 0L
@@ -6220,7 +6290,7 @@ class GraftLogBucketReader(files: Seq[String],
     while (cur == null || !cur.next()) {
       if (cur != null) cur.close()
       if (!iter.hasNext) { cur = null; return false }
-      cur = new GraftLogReader(iter.next(), refs, Some(ub))
+      cur = new GraftLogReader(iter.next(), refs, Some(ub), lo = lo, hi = hi)
       opened += 1
     }
     true

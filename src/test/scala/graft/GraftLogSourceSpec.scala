@@ -234,8 +234,10 @@ class GraftLogSourceSpec extends SparkSuite {
 
   test("aggregate pushdown refuses on residual filters or a missing sidecar") {
     val dir = writeShards()
-    // filtered count: our filters are residual by design, so Spark
-    // never offers the aggregate — rows are read (from pruned shards)
+    // filtered count: the scan consumes the key bounds, so Spark
+    // offers the aggregate, but sidecar stats describe whole shards,
+    // not the filtered rows — the scan refuses and rows are read
+    // (from pruned shards)
     GraftLog.filesOpened.set(0)
     assert(spark.read.format(fmt).load(dir)
       .filter($"event_id" >= 250L && $"event_id" < 320L).count() === 70L)
