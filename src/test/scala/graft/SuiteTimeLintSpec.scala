@@ -149,7 +149,7 @@ class SuiteTimeLintSpec extends AnyFunSuite {
     // ceiling that catches uniformly-loaded runs (the driver's
     // load-16 map read 1.40).
     val med = times.values.toSeq.sorted.apply(times.size / 2)
-    val speed = med / 0.65 // r12 quiet calibration median
+    val speed = Bench.speedOf(med) // median / r12 quiet calibration median
     // r16 recalibration of the ABSOLUTE ceiling: 1.35 was set on the
     // r12-r13 boxes; the r16 sandbox is a ~25% slower clock (cpu_sec
     // 3713 vs 3022 for byte-identical code on the r15 driver box) and
@@ -161,15 +161,20 @@ class SuiteTimeLintSpec extends AnyFunSuite {
     // load-9 sweep read 1.21 on the FAST box ≈ 1.5× that on this one.
     // Bench.scala refuses to write a file of record that fails this
     // same test (relative AND absolute, one shared ceiling constant),
-    // so the committed map this lint reads is quiet by construction.
+    // that lost > 3% of the machine to steal over its timed loop, or
+    // in which a query over the budget below lost > 3% to steal in its
+    // own window (the burst rule, `Bench.contention`). So every query
+    // this lint can flag in a committed map lost at most 3% of the
+    // machine to steal while it was timed.
     assume(mean <= 1.15 * speed && mean <= Bench.contendedMeanCeiling,
       f"BENCH_LOCAL.json is from a contended run (${mean}%.2f s/query " +
         f"mean vs ${1.15 * speed}%.2f expected for this map's median) " +
         "— re-run the bench on an idle machine before trusting " +
         "per-query times")
     // budget = max(5 s × speed, 6× suite median): the absolute floor
-    // is the r9 brief's 5 s, scaled by the same machine-speed proxy
-    val budget = math.max(5.0 * speed, 6.0 * med)
+    // is the r9 brief's 5 s, scaled by the same machine-speed proxy;
+    // Bench's burst rule judges the same budget
+    val budget = Bench.timeBudget(med)
     val offenders =
       effective.filter(_._2 > budget).keySet -- whitelist.keySet
     assert(offenders.isEmpty,
