@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -86,63 +87,53 @@ case class ArrayDotProduct(left: Expression, right: Expression)
 
 /** Session registration for the graft SQL function extensions. */
 object GraftFunctions {
+  /** Registers every graft function the session does not hold yet.
+    * Idempotent: table reads call it on every access, and re-creating
+    * a registered function would log "replaced a previously
+    * registered function" each time. */
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction(
-      "graft_dot", exprs => ArrayDotProduct(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_minhash_sig", exprs => {
-        // optional second arg: signature length k (foldable int)
-        val k = if (exprs.length > 1)
-          exprs(1).eval(null).asInstanceOf[Int] else 64
-        MinHashSigAgg(exprs.head, k)
-      }, "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_sorted_intersect",
-      exprs => SortedIntersectSize(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_ivf_top_cells",
-      exprs => IvfTopCells(exprs(0), exprs(1), exprs(2)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_simhash_bits",
-      exprs => SimHashBitsAgg(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_lsh_buckets",
-      exprs => LshBuckets(exprs(0), exprs(1), exprs(2), exprs(3)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_nfc", exprs => NfcNormalize(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_bloom_might_contain",
-      exprs => BloomMightContainExpr(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_bpe_encode",
-      exprs => BpeEncodeExpr(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_gopher_stats", exprs => GopherStatsExpr(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_text_stats", exprs => TextStatsExpr(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_shingles", exprs => {
-        // optional args: shingle width n (foldable int), distinct flag
-        val n = if (exprs.length > 1)
-          exprs(1).eval(null).asInstanceOf[Int] else 3
-        val distinct = if (exprs.length > 2)
-          exprs(2).eval(null).asInstanceOf[Boolean] else true
-        ShinglesExpr(exprs.head, n, distinct)
-      }, "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_kmv", exprs => {
-        // optional second arg: sketch size k (foldable int)
-        val k = if (exprs.length > 1)
-          exprs(1).eval(null).asInstanceOf[Int] else 256
-        KmvAgg(exprs.head, k)
-      }, "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_freq_items", exprs => {
-        // optional second arg: summary capacity (foldable int)
-        val cap = if (exprs.length > 1)
-          exprs(1).eval(null).asInstanceOf[Int] else 256
-        FreqItemsAgg(exprs.head, cap)
-      }, "built-in")
+    builders.foreach { case (name, build) =>
+      if (!reg.functionExists(FunctionIdentifier(name)))
+        reg.createOrReplaceTempFunction(name, build, "built-in")
+    }
   }
+
+  private val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
+    ("graft_dot", exprs => ArrayDotProduct(exprs(0), exprs(1))),
+    ("graft_minhash_sig", exprs => {
+      // optional second arg: signature length k (foldable int)
+      val k = if (exprs.length > 1)
+        exprs(1).eval(null).asInstanceOf[Int] else 64
+      MinHashSigAgg(exprs.head, k)
+    }),
+    ("graft_sorted_intersect", exprs => SortedIntersectSize(exprs(0), exprs(1))),
+    ("graft_ivf_top_cells", exprs => IvfTopCells(exprs(0), exprs(1), exprs(2))),
+    ("graft_simhash_bits", exprs => SimHashBitsAgg(exprs.head)),
+    ("graft_lsh_buckets", exprs => LshBuckets(exprs(0), exprs(1), exprs(2), exprs(3))),
+    ("graft_nfc", exprs => NfcNormalize(exprs.head)),
+    ("graft_bloom_might_contain", exprs => BloomMightContainExpr(exprs(0), exprs(1))),
+    ("graft_bpe_encode", exprs => BpeEncodeExpr(exprs(0), exprs(1))),
+    ("graft_gopher_stats", exprs => GopherStatsExpr(exprs.head)),
+    ("graft_text_stats", exprs => TextStatsExpr(exprs.head)),
+    ("graft_shingles", exprs => {
+      // optional args: shingle width n (foldable int), distinct flag
+      val n = if (exprs.length > 1)
+        exprs(1).eval(null).asInstanceOf[Int] else 3
+      val distinct = if (exprs.length > 2)
+        exprs(2).eval(null).asInstanceOf[Boolean] else true
+      ShinglesExpr(exprs.head, n, distinct)
+    }),
+    ("graft_kmv", exprs => {
+      // optional second arg: sketch size k (foldable int)
+      val k = if (exprs.length > 1)
+        exprs(1).eval(null).asInstanceOf[Int] else 256
+      KmvAgg(exprs.head, k)
+    }),
+    ("graft_freq_items", exprs => {
+      // optional second arg: summary capacity (foldable int)
+      val cap = if (exprs.length > 1)
+        exprs(1).eval(null).asInstanceOf[Int] else 256
+      FreqItemsAgg(exprs.head, cap)
+    }))
 }

@@ -1242,7 +1242,7 @@ object OpsQueries {
             .foreach(java.nio.file.Files.deleteIfExists(_))
         }
       }
-      def drain(): Unit = {
+      def drain(): Unit = graft.streaming.StreamTuning.withLocalCheckpoints(s) {
         val q = s.readStream.format(fmt)
           .option("maxShardsPerTrigger", 2).load(src)
           .writeStream.format(fmt)
@@ -1321,7 +1321,7 @@ object OpsQueries {
             $"event_type", $"value")
           .write.format(fmt).mode("append").option("shards", 1).save(log)
       val drainedIds = scala.collection.mutable.ArrayBuffer.empty[Long]
-      def drain(): Seq[Long] = {
+      def drain(): Seq[Long] = graft.streaming.StreamTuning.withLocalCheckpoints(s) {
         val q = s.readStream.format(fmt)
           .option("readChangeFeed", "true")
           .option("sinceVersion", tok0)

@@ -2697,11 +2697,14 @@ object GraftLog {
       servingDir.toAbsolutePath.normalize
     val d = if (live) Paths.get(path, DvDir) else servingDir
     if (!Files.isDirectory(d)) return None
-    val want = echoOf(si)
-    if (want.isEmpty) return None
     val cands = withListing(d)(_.map(_.getFileName.toString).toSeq)
       .collect { case DvName(n, g) if n == name && g.toLong <= gen =>
         (g.toLong, n) }
+    val want = echoOf(si)
+    if (want.isEmpty) {
+      if (cands.nonEmpty) throw sidecarLost(path, name)
+      return None
+    }
     cands.sortBy(-_._1).view.map { case (g, n) =>
       d.resolve(s"$n.g$g.dv")
     }.find { f =>
@@ -2712,6 +2715,16 @@ object GraftLog {
       } catch { case scala.util.control.NonFatal(_) => false }
     }.map(_.toString)
   }
+
+  /** A vector binds to its shard through the sidecar echo, so a shard
+    * that lost its sidecar cannot tell a live vector from a stale one.
+    * Serving it anyway would bring its deleted rows back: fail the
+    * read instead, naming the shard. */
+  private def sidecarLost(path: String, name: String) =
+    new IllegalStateException(
+      s"graftlog shard $name of $path has a deletion vector but no " +
+        "sidecar, so its deleted rows would reappear; run " +
+        "CALL glog.analyze(table) to rebuild the sidecar")
 
   /** Resolve the dv for every shard of a planned read — ONE listing
     * per distinct serving directory (live root, or a retired store
@@ -2743,10 +2756,13 @@ object GraftLog {
         if (servingDir.toAbsolutePath.normalize == tableRoot)
           Paths.get(path, DvDir)
         else servingDir
+      val cands = candidates(servingDir).getOrElse(name, Nil)
+        .filter(_._1 <= gen)
       val want = echoOf(si)
-      if (want.isEmpty) None
-      else candidates(servingDir).getOrElse(name, Nil)
-        .filter(_._1 <= gen).sortBy(-_._1).view
+      if (want.isEmpty) {
+        if (cands.nonEmpty) throw sidecarLost(path, name)
+        None
+      } else cands.sortBy(-_._1).view
         .map { case (_, f) => d.resolve(f) }
         .find { f =>
           try {

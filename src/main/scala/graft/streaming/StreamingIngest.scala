@@ -38,7 +38,7 @@ object StreamingIngest {
       warehouseZone: String,
       checkpointDir: String,
       loadDate: String,
-      maxFilesPerTrigger: Int = 1): Unit = {
+      maxFilesPerTrigger: Int = 1): Unit = StreamTuning.withLocalCheckpoints(spark) {
     val schema = rawSchemas.forKind(kind).getOrElse(
       throw new IllegalArgumentException(
         s"streaming ingest needs a declared schema; none for ${kind.fileType}"))

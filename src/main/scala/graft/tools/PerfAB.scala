@@ -74,7 +74,7 @@ object PerfAB {
         spark.conf.set("spark.sql.catalog.glog.base", "/tmp/graft-glog-cat")
         val tbl = graft.queries.GlogFixtures.tableName(
           graft.queries.GlogFixtures.eventsLog(spark, dir, 8))
-        def drain(mspt: Int): Long = {
+        def drain(mspt: Int): Long = graft.streaming.StreamTuning.withLocalCheckpoints(spark) {
           val sink = java.nio.file.Files
             .createTempDirectory(s"graft_ab199_").toString
           val q = spark.readStream

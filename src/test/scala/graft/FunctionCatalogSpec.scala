@@ -1,5 +1,12 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.logging.log4j.{Level, LogManager}
+import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+import org.apache.logging.log4j.core.appender.AbstractAppender
+import org.apache.logging.log4j.core.config.Property
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.objects.Invoke
 
 /** Pins the V2 FunctionCatalog seam (GraftLogCatalog as
@@ -65,9 +72,48 @@ class FunctionCatalogSpec extends SparkSuite {
       spark.sql("SELECT gfn.graft_nope(1)").collect()
     }
   }
+
+  test("a second register leaves the registry unchanged and logs no warning") {
+    val reg = spark.sessionState.functionRegistry
+    GraftFunctionsFixture.ensure(spark)
+    def graftFns() = reg.listFunction().map(_.funcName)
+      .filter(_.startsWith("graft_")).sorted
+      .map(n => n -> reg.lookupFunction(FunctionIdentifier(n)).get)
+    val before = graftFns()
+    // other suites may add graft_* functions of their own
+    assert(Set("graft_dot", "graft_freq_items").subsetOf(before.map(_._1).toSet))
+    val warnings = GraftFunctionsFixture.warningsDuring {
+      GraftFunctionsFixture.ensure(spark)
+    }
+    val after = graftFns()
+    assert(after.map(_._1) === before.map(_._1))
+    // a re-registration would store a fresh ExpressionInfo
+    before.zip(after).foreach { case ((n, a), (_, b)) =>
+      assert(a eq b, s"$n was registered again")
+    }
+    assert(!warnings.exists(_.contains("previously registered")),
+      warnings.mkString("\n"))
+  }
 }
 
 private object GraftFunctionsFixture {
+  /** Messages logged at WARN or above while `f` runs. */
+  def warningsDuring(f: => Unit): Seq[String] = {
+    val got = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val app = new AbstractAppender("graft-fn-capture", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel.isMoreSpecificThan(Level.WARN))
+          got.add(e.getMessage.getFormattedMessage)
+    }
+    app.start()
+    val root = LogManager.getContext(false).asInstanceOf[LoggerContext]
+      .getRootLogger
+    root.addAppender(app)
+    try f finally { root.removeAppender(app); app.stop() }
+    got.asScala.toSeq
+  }
+
   def ensure(spark: org.apache.spark.sql.SparkSession): Unit =
     graft.functions.GraftFunctions.register(spark)
 }

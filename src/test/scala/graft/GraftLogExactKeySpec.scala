@@ -1,5 +1,9 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.execution.{ColumnarToRowExec, FilterExec, InputAdapter, SparkPlan, WholeStageCodegenExec}
@@ -108,12 +112,29 @@ class GraftLogExactKeySpec extends SparkSuite {
     val kept = rows.filterNot(r => gone.contains(r._1))
     assertSameAsReference(read, reference(kept), preds, "dv")
     // a shard that lost its sidecar is unprunable; the reader still
-    // drops every out-of-range line (a fresh log: a vector binds to
-    // its shard through the sidecar, so it cannot outlive one)
+    // drops every out-of-range line
     val bare = writeLog(rows)
-    java.nio.file.Files.delete(java.nio.file.Paths.get(bare, "shard-00002.meta"))
+    Files.delete(Paths.get(bare, "shard-00002.meta"))
     assertSameAsReference(() => spark.read.format(fmt).load(bare),
       reference(rows), preds, "missing sidecar")
+    // a vector binds to its shard through the sidecar echo: a shard
+    // with a vector that lost its sidecar fails the read by name
+    // instead of serving its deleted rows again; CALL glog.analyze
+    // rebuilds the sidecar and the vector applies again
+    val dvShard = {
+      val s = Files.list(Paths.get(dir, "_dv"))
+      try s.iterator().asScala.map(_.getFileName.toString)
+        .filter(_.endsWith(".dv")).toSeq.min.takeWhile(_ != '.') + ".graftlog"
+      finally s.close()
+    }
+    Files.delete(Paths.get(dir, dvShard.stripSuffix(".graftlog") + ".meta"))
+    val e = intercept[Exception](read().collect())
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage)).toSeq
+    assert(msgs.exists(m => m.contains(dvShard) && m.contains("no sidecar")),
+      msgs.mkString("\n"))
+    assert(GraftLog.analyze(dir)._2 === 1)
+    assertSameAsReference(read, reference(kept), preds, "dv after analyze")
   }
 
   test("bucketed and version-pinned reads apply the bounds exactly") {
