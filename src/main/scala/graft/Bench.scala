@@ -57,20 +57,32 @@ object Bench {
       spillMb: Double, stealSec: Double)
 
   /** Why a full sweep must not be the file of record, or None when it
-    * may. Any one of four signals quarantines it:
+    * may. Any one of five signals quarantines it:
     *  - the lint's relative test: mean hot against the median-implied
     *    machine speed (sustained co-tenancy fattens the tail);
     *  - the lint's absolute ceiling (uniform contention inflates the
     *    median WITH the mean and blinds the relative test);
     *  - steal over the whole timed loop above `stealLimit`;
-    *  - a steal BURST: a query over `timeBudget` that lost more than
-    *    `stealLimit` of the machine to steal in its own window. The r16
-    *    record passed the three tests above (2.5% loop steal, mean
-    *    1.43) while a burst doubled q212…q222 and pushed q216 and q222
-    *    over budget; averaged over the loop a burst hides, in the
-    *    windows of the queries it inflates it does not.
-    * So no query the lint would flag in an admitted map lost more than
-    * `stealLimit` of the machine to steal while it was timed. */
+    *  - a steal BURST on a query the lint would flag: a query over
+    *    `timeBudget` that lost more than `stealLimit` of the machine to
+    *    steal in its own window. The r16 record passed the three tests
+    *    above (2.5% loop steal, mean 1.43) while a burst doubled
+    *    q212…q222 and pushed q216 and q222 over budget; averaged over
+    *    the loop a burst hides, in the windows of the queries it
+    *    inflates it does not;
+    *  - a steal burst anywhere: adjacent queries whose timed windows
+    *    add up to at least one budget and lost more than `stealLimit`
+    *    of the machine to steal between them. The sweep admitted after
+    *    r16 passed all four tests above (2.90% loop steal, no query
+    *    over budget) with a burst of up to 21.9% per window on q56–q67;
+    *    q66 read 0.93× the budget with 14.4% steal. A burst under the
+    *    budget can still lift a near-budget query, or keep a healed
+    *    whitelist entry high. A span of one budget is as long as the
+    *    slowest query the lint passes, and long enough that /proc/stat's
+    *    100 Hz steal ticks resolve `stealLimit` (over 5 s on 4 cores,
+    *    3% is 60 ticks): a lone spike on a short query stays noise.
+    * So no query in an admitted map was timed inside a span of the
+    * loop that lost more than `stealLimit` of the machine to steal. */
   def contention(runs: Seq[QueryRun], loopStealSec: Double,
       loopWallSec: Double, nCores: Int): Option[String] = {
     val ok = runs.filter(_.sec >= 0)
@@ -92,6 +104,24 @@ object Bench {
       f"${r.name} took ${r.sec}%.2f s, over the $budget%.2f s budget, " +
         f"and lost ${100 * stealFrac(r.stealSec, r.sec)}%.1f%% " +
         "of the machine to steal in its window"
+    }.orElse {
+      // every shortest span of adjacent queries reaching one budget of
+      // timed time; the most stolen one names the burst
+      val spans = ok.indices.iterator.flatMap { i =>
+        val len = ok.iterator.drop(i).scanLeft(0.0)(_ + _.sec)
+          .indexWhere(_ >= budget)
+        if (len < 0) None else {
+          val span = ok.slice(i, i + len)
+          val sec = span.map(_.sec).sum
+          Some((stealFrac(span.map(r => r.stealSec max 0.0).sum, sec),
+            span, sec))
+        }
+      }
+      spans.maxByOption(_._1).filter(_._1 > stealLimit).map {
+        case (frac, span, sec) =>
+          f"${span.head.name}…${span.last.name} lost ${100 * frac}%.1f%% " +
+            f"of the machine to steal over $sec%.2f s of adjacent queries"
+      }
     }
   }
 
@@ -335,9 +365,10 @@ object Bench {
     // (`contention`): a contended full sweep lands in
     // BENCH_LOCAL_contended.json, loudly, and the quiet record
     // survives. The gate shares the lint's mean tests and budget, and
-    // adds steal over the loop and in each over-budget query's own
-    // window, so the lint can red on an admitted map only through a
-    // query that was slow while the hypervisor gave it its cores.
+    // adds steal over the loop, in each over-budget query's own window
+    // and over every budget-long span of adjacent queries, so the lint
+    // can red on an admitted map only through a query that was slow
+    // while the hypervisor gave it its cores.
     val nCores = Runtime.getRuntime.availableProcessors()
     if (fileOfRecord) {
       val why = contention(results, stealSec, wallSec, nCores)

@@ -4,13 +4,19 @@ import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 
 /** Per-job wall-time profiler for one or more registry queries: runs
   * each query exactly as Bench does (same master/width/confs, warm
   * second rep) and prints every Spark job the query submitted with
-  * its duration, task count, and the callsite of its first stage —
-  * the measurement §1 of the optimization guide asks for before any
-  * change. Usage:
+  * its duration, task count, and a label — the measurement §1 of the
+  * optimization guide asks for before any change. A job that belongs
+  * to a SQL execution is labelled with that execution's description
+  * (its action's call site): AQE submits query-stage jobs from a
+  * pool thread, so their own stage call site is the same
+  * `CompletableFuture` frame for every job. Other jobs keep the call
+  * site of their last stage. Usage:
   *   runMain graft.tools.ProfileQ <q1,q2,…> [sfDir] [cpus]
   */
 object ProfileQ {
@@ -20,11 +26,20 @@ object ProfileQ {
       var nStages: Int = 0)
     val jobs = new ConcurrentHashMap[Int, Job]()
     val stageToJob = new ConcurrentHashMap[Int, Int]()
+    val execLabel = new ConcurrentHashMap[Long, String]()
+    override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+      case s: SparkListenerSQLExecutionStart =>
+        execLabel.put(s.executionId, s"sql ${s.executionId}: ${s.description}")
+      case _ => ()
+    }
     override def onJobStart(e: SparkListenerJobStart): Unit = {
       val j = Job(e.jobId, e.time)
       j.nStages = e.stageInfos.size
-      j.site = e.stageInfos.sortBy(_.stageId).lastOption
-        .map(_.name).getOrElse("")
+      val exec = Option(e.properties)
+        .flatMap(p => Option(p.getProperty(SQLExecution.EXECUTION_ID_KEY)))
+        .flatMap(id => Option(execLabel.get(id.toLong)))
+      j.site = exec.getOrElse(e.stageInfos.sortBy(_.stageId).lastOption
+        .map(_.name).getOrElse(""))
       e.stageInfos.foreach(s => stageToJob.put(s.stageId, e.jobId))
       jobs.put(e.jobId, j)
     }
@@ -36,7 +51,7 @@ object ProfileQ {
       val j = jobs.get(e.jobId)
       if (j != null) j.t1 = e.time
     }
-    def reset(): Unit = { jobs.clear(); stageToJob.clear() }
+    def reset(): Unit = { jobs.clear(); stageToJob.clear(); execLabel.clear() }
     def report(): Unit = {
       import scala.jdk.CollectionConverters._
       val all = jobs.values.asScala.toSeq.sortBy(_.id)

@@ -158,6 +158,62 @@ object Ivf {
       .select(col(queryId), col("rank"), col(corpusId), col("cosine"))
   }
 
+  /** IVF evaluation kernel: the exact ranking and the ranking of every
+    * probe width in `widths`, from ONE scoring pass and one window.
+    *
+    * Every (query, corpus) pair is scored once, the query side
+    * broadcast against the assigned corpus (see [[assign]]), and
+    * tagged with `cpos`: the position of its corpus cell in the
+    * query's `probeCells(q, widths.max)`, null when the cell is not
+    * among them or either vector is null. One window per query, in
+    * the (cosine desc, corpus id) order every top-k here uses, then
+    * counts ranks as running totals:
+    *  - `exact_rank`: the running count of non-self rows — the rank
+    *    [[VectorFunctions.knnBruteForce]] gives the row;
+    *  - `rank_<w>`: the running count of non-self rows with cpos < w.
+    *    probeCells(q, w) is the first w entries of
+    *    probeCells(q, widths.max) (IvfProbePrefixSpec), so cpos < w is
+    *    exactly the candidate set of [[searchAssigned]] at nprobe = w,
+    *    and over a total order the running count of a set's members is
+    *    the row_number that set's own window gives them.
+    * A rank is null on rows outside its set (self rows; cpos ≥ w).
+    * Self rows stay in the output with their `cpos`, so a candidate
+    * count over `cpos < w` counts them as a cell's size does.
+    * `n_corpus` is the number of corpus rows the query was scored
+    * against.
+    *
+    * Cost: |queries| × |corpus| dot products and one exchange on the
+    * query id. It fits bounded eval sets (the registry's 20 queries),
+    * where the exact truth needs every pair anyway. */
+  def evalRanks(queries: DataFrame, assigned: DataFrame, m: Model,
+      widths: Seq[Int], queryId: String = "query_id",
+      corpusId: String = "neighbor_id", vecCol: String = "embedding"):
+      DataFrame = {
+    val q = queries.select(
+      col(queryId), col(vecCol).as("q_vec"),
+      sqrt(dotExact(col(vecCol), col(vecCol))).as("q_norm"),
+      probeCells(col(vecCol), m, widths.max).as("probes"))
+    val pos = array_position(col("probes"), col("cell"))
+    val order = Window.partitionBy(col(queryId))
+      .orderBy(col("cosine").desc, col(corpusId))
+    val upTo = order.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    def rank(member: Column): Column =
+      when(member, count(when(member, 1)).over(upTo).cast("int"))
+    val other = col(queryId) =!= col(corpusId)
+    assigned.crossJoin(broadcast(q))
+      .select(col(queryId), col(corpusId),
+        when(pos > 0, (pos - 1).cast("int")).as("cpos"),
+        (dotExact(col("q_vec"), col("c_vec")) /
+          (col("q_norm") * col("c_norm"))).as("cosine"))
+      .select(Seq(col(queryId), col(corpusId), col("cosine"), col("cpos"),
+        // whole-partition count under the ranks' own partition and
+        // order, so Spark computes it in the same window operator
+        count(lit(1)).over(order.rowsBetween(
+          Window.unboundedPreceding, Window.unboundedFollowing)).as("n_corpus"),
+        rank(other).as("exact_rank")) ++
+        widths.map(w => rank(other && col("cpos") < w).as(s"rank_$w")): _*)
+  }
+
   /** One-shot search for callers without a cached assignment. */
   def search(queries: DataFrame, corpus: DataFrame, m: Model, k: Int,
       nprobe: Int, queryId: String = "query_id",

@@ -4,15 +4,19 @@ import org.apache.spark.sql.functions._
 
 import graft.vector.Ivf
 
-/** The probe-ranking PREFIX property two r16 rewrites lean on:
-  * IvfTopCells.selectTop ranks cells by a fixed total order (score
-  * desc, larger cell id on ties), so `probeCells(v, n)` must equal
-  * the first n entries of `probeCells(v, N)` for any n ≤ N. q216
-  * scores candidates once at the widest probe and reconstructs every
-  * narrower leg as a rank filter; SemDedup.keep reads the argmax cell
-  * as probe rank 0 of its multi-probe frame. Both are only correct if
-  * this property holds for every vector — pinned here over the whole
-  * sf0.001 embedding corpus, not a sample. */
+/** The probe-ranking PREFIX property the IVF evaluation kernel and
+  * SemDedup lean on: IvfTopCells.selectTop ranks cells by a fixed
+  * total order (score desc, larger cell id on ties), so
+  * `probeCells(v, n)` must equal the first n entries of
+  * `probeCells(v, N)` for any n ≤ N. `Ivf.evalRanks` (q144, q150,
+  * q216) tags each pair with its cell's position `cpos` in the widest
+  * probe list, so the width-n candidate set is exactly the rows with
+  * cpos < n; ranked in one window by (cosine desc, neighbor_id), the
+  * running count of those rows is the rank a width-n search gives.
+  * SemDedup.keep reads the argmax cell as probe rank 0 of its
+  * multi-probe frame. Both are only correct if this property holds
+  * for every vector — pinned here over the whole sf0.001 embedding
+  * corpus, not a sample. */
 class IvfProbePrefixSpec extends SparkSuite {
   import spark.implicits._
 
@@ -33,7 +37,8 @@ class IvfProbePrefixSpec extends SparkSuite {
         !(expr("slice(p8, 1, 1)") === $"p1") ||
         element_at($"p8", 1) =!= $"argmax").count()
     assert(violations === 0L,
-      "probe ranking is not prefix-stable — the q216 rank-filter " +
-        "rewrite and SemDedup's rank-0 manifest would be wrong")
+      "probe ranking is not prefix-stable — the IVF evaluation " +
+        "kernel's per-width ranks and SemDedup's rank-0 manifest " +
+        "would be wrong")
   }
 }

@@ -53,9 +53,10 @@ class PlanAuditSpec extends SparkSuite {
     // retrieval legs are bounded top-20 sets, fusion is a 40-row
     // full-outer equi-join.
     "q139_hybrid_rrf", "q142_hybrid_rrf_ivf",
-    // q144/q150: the exact leg is q31's bounded nested loop (20 eval
-    // queries broadcast, k·n scan) — eval sets are small by
-    // construction; the ANN leg is the cell equi-join.
+    // q144/q150: the IVF evaluation kernel (Ivf.evalRanks) is q31's
+    // bounded nested loop (20 eval queries broadcast, k·n scan) —
+    // eval sets are small by construction, and the exact truth scores
+    // every pair anyway; the probe ranks ride the same pass.
     "q144_ann_recall_report", "q150_mrr_eval",
     // q153: each audit pairs a 1-ROW rollup with a broadcast 1-ROW
     // hot-key frame (the q111 scalar × scalar pattern).
@@ -86,9 +87,9 @@ class PlanAuditSpec extends SparkSuite {
     // q214: the (min,max) doc-id range rides as a broadcast 1-ROW
     // frame (the q103/q111 scalar-stats pattern).
     "q214_vocab_growth",
-    // q216: each curve point pairs 1-ROW hit/candidate aggregates
-    // (the q111/q153 scalar × scalar pattern); the probe joins
-    // themselves are equi-joins on cell.
+    // q216: q144's kernel nested loop (20 eval queries broadcast,
+    // k·n scan), ranked once for the exact truth and all four probe
+    // widths; the curve is one aggregate over it.
     "q216_ann_tuning_curve",
     // q217: corpus stats ride as broadcast 1-ROW frames (the q103
     // pattern) and each leg pairs bounded top-5/top-1 frames
