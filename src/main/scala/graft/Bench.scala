@@ -57,30 +57,27 @@ object Bench {
       spillMb: Double, stealSec: Double)
 
   /** Why a full sweep must not be the file of record, or None when it
-    * may. Any one of five signals quarantines it:
+    * may. Any one of four signals quarantines it:
     *  - the lint's relative test: mean hot against the median-implied
     *    machine speed (sustained co-tenancy fattens the tail);
     *  - the lint's absolute ceiling (uniform contention inflates the
     *    median WITH the mean and blinds the relative test);
     *  - steal over the whole timed loop above `stealLimit`;
-    *  - a steal BURST on a query the lint would flag: a query over
-    *    `timeBudget` that lost more than `stealLimit` of the machine to
-    *    steal in its own window. The r16 record passed the three tests
+    *  - a steal BURST: adjacent queries whose timed windows add up to
+    *    at least one budget (`timeBudget`) and lost more than
+    *    `stealLimit` of the machine to steal between them. Averaged
+    *    over the loop a burst hides; in the windows of the queries it
+    *    inflates it does not. The r16 record passed the three tests
     *    above (2.5% loop steal, mean 1.43) while a burst doubled
-    *    q212…q222 and pushed q216 and q222 over budget; averaged over
-    *    the loop a burst hides, in the windows of the queries it
-    *    inflates it does not;
-    *  - a steal burst anywhere: adjacent queries whose timed windows
-    *    add up to at least one budget and lost more than `stealLimit`
-    *    of the machine to steal between them. The sweep admitted after
-    *    r16 passed all four tests above (2.90% loop steal, no query
-    *    over budget) with a burst of up to 21.9% per window on q56–q67;
-    *    q66 read 0.93× the budget with 14.4% steal. A burst under the
-    *    budget can still lift a near-budget query, or keep a healed
-    *    whitelist entry high. A span of one budget is as long as the
-    *    slowest query the lint passes, and long enough that /proc/stat's
-    *    100 Hz steal ticks resolve `stealLimit` (over 5 s on 4 cores,
-    *    3% is 60 ticks): a lone spike on a short query stays noise.
+    *    q212…q222 and pushed q216 and q222 over budget; the sweep
+    *    admitted after it passed them too (2.90% loop steal, no query
+    *    over budget) with up to 21.9% per window on q56–q67, q66 at
+    *    0.93× the budget. A query over the budget is a span by itself,
+    *    so a burst on one is always seen. A span of one budget is as
+    *    long as the slowest query the lint passes, and long enough
+    *    that /proc/stat's 100 Hz steal ticks resolve `stealLimit` (over
+    *    5 s on 4 cores, 3% is 60 ticks): a lone spike on a short query
+    *    stays noise. The message names the span and its slowest query.
     * So no query in an admitted map was timed inside a span of the
     * loop that lost more than `stealLimit` of the machine to steal. */
   def contention(runs: Seq[QueryRun], loopStealSec: Double,
@@ -99,12 +96,7 @@ object Bench {
       Some(f"mean $mean%.2f s/query over the $contendedMeanCeiling%.2f ceiling")
     else if (loopSteal > stealLimit)
       Some(f"steal ${100 * loopSteal}%.1f%% over the timed loop")
-    else ok.find(r => r.sec > budget &&
-        stealFrac(r.stealSec, r.sec) > stealLimit).map { r =>
-      f"${r.name} took ${r.sec}%.2f s, over the $budget%.2f s budget, " +
-        f"and lost ${100 * stealFrac(r.stealSec, r.sec)}%.1f%% " +
-        "of the machine to steal in its window"
-    }.orElse {
+    else {
       // every shortest span of adjacent queries reaching one budget of
       // timed time; the most stolen one names the burst
       val spans = ok.indices.iterator.flatMap { i =>
@@ -119,8 +111,11 @@ object Bench {
       }
       spans.maxByOption(_._1).filter(_._1 > stealLimit).map {
         case (frac, span, sec) =>
+          val slowest = span.maxBy(_.sec)
           f"${span.head.name}…${span.last.name} lost ${100 * frac}%.1f%% " +
-            f"of the machine to steal over $sec%.2f s of adjacent queries"
+            f"of the machine to steal over $sec%.2f s of adjacent queries; " +
+            f"slowest ${slowest.name} took ${slowest.sec}%.2f s against " +
+            f"the $budget%.2f s budget"
       }
     }
   }

@@ -161,8 +161,11 @@ object Ivf {
   /** IVF evaluation kernel: the exact ranking and the ranking of every
     * probe width in `widths`, from ONE scoring pass and one window.
     *
+    * `queries` carries `query_id` and `embedding`; `assigned` is
+    * [[assign]]'s output over `neighbor_id`.
+    *
     * Every (query, corpus) pair is scored once, the query side
-    * broadcast against the assigned corpus (see [[assign]]), and
+    * broadcast against the assigned corpus, and
     * tagged with `cpos`: the position of its corpus cell in the
     * query's `probeCells(q, widths.max)`, null when the cell is not
     * among them or either vector is null. One window per query, in
@@ -186,26 +189,25 @@ object Ivf {
     * query id. It fits bounded eval sets (the registry's 20 queries),
     * where the exact truth needs every pair anyway. */
   def evalRanks(queries: DataFrame, assigned: DataFrame, m: Model,
-      widths: Seq[Int], queryId: String = "query_id",
-      corpusId: String = "neighbor_id", vecCol: String = "embedding"):
-      DataFrame = {
+      widths: Seq[Int]): DataFrame = {
     val q = queries.select(
-      col(queryId), col(vecCol).as("q_vec"),
-      sqrt(dotExact(col(vecCol), col(vecCol))).as("q_norm"),
-      probeCells(col(vecCol), m, widths.max).as("probes"))
+      col("query_id"), col("embedding").as("q_vec"),
+      sqrt(dotExact(col("embedding"), col("embedding"))).as("q_norm"),
+      probeCells(col("embedding"), m, widths.max).as("probes"))
     val pos = array_position(col("probes"), col("cell"))
-    val order = Window.partitionBy(col(queryId))
-      .orderBy(col("cosine").desc, col(corpusId))
+    val order = Window.partitionBy(col("query_id"))
+      .orderBy(col("cosine").desc, col("neighbor_id"))
     val upTo = order.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     def rank(member: Column): Column =
       when(member, count(when(member, 1)).over(upTo).cast("int"))
-    val other = col(queryId) =!= col(corpusId)
+    val other = col("query_id") =!= col("neighbor_id")
     assigned.crossJoin(broadcast(q))
-      .select(col(queryId), col(corpusId),
+      .select(col("query_id"), col("neighbor_id"),
         when(pos > 0, (pos - 1).cast("int")).as("cpos"),
         (dotExact(col("q_vec"), col("c_vec")) /
           (col("q_norm") * col("c_norm"))).as("cosine"))
-      .select(Seq(col(queryId), col(corpusId), col("cosine"), col("cpos"),
+      .select(Seq(col("query_id"), col("neighbor_id"), col("cosine"),
+        col("cpos"),
         // whole-partition count under the ranks' own partition and
         // order, so Spark computes it in the same window operator
         count(lit(1)).over(order.rowsBetween(

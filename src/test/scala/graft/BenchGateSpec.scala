@@ -78,6 +78,13 @@ class BenchGateSpec extends AnyFunSuite {
     (Bench.recordName(why.isDefined, cpus, nCores), why)
   }
 
+  /** The first and last query of the span a burst message names. */
+  private def spanOf(why: Option[String]): (String, String) = {
+    val span = "^(q\\d+)_x…(q\\d+)_x lost".r
+    why.flatMap(span.findFirstMatchIn)
+      .map(m => (m.group(1), m.group(2))).getOrElse(("", ""))
+  }
+
   test("a quiet sweep becomes the file of record") {
     for (seed <- 1L to 5L) {
       val runs = quiet(seed)
@@ -100,7 +107,9 @@ class BenchGateSpec extends AnyFunSuite {
       assert(ts.count(_ > Bench.timeBudget(med)) === 1)
       val (name, why) = gate(runs, wall)
       assert(name === "BENCH_LOCAL_contended.json", s"seed $seed")
-      assert(why.exists(_.startsWith("q206_x")), why)
+      // the worst span lies inside the burst, q201…q212
+      val (first, last) = spanOf(why)
+      assert(first >= "q201" && last <= "q212" && first <= last, why)
     }
   }
 
@@ -135,9 +144,7 @@ class BenchGateSpec extends AnyFunSuite {
       assert(ts.forall(_ <= Bench.timeBudget(med)))
       val (name, why) = gate(runs, wall, loopSteal = Some(loopSteal))
       assert(name === "BENCH_LOCAL_contended.json", s"seed $seed")
-      val span = "^(q\\d+)_x…(q\\d+)_x lost".r
-      val (first, last) = why.flatMap(span.findFirstMatchIn)
-        .map(m => (m.group(1), m.group(2))).getOrElse(("", ""))
+      val (first, last) = spanOf(why)
       assert(first >= "q054" && last <= "q067" && first <= last, why)
     }
   }

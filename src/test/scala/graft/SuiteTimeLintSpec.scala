@@ -161,10 +161,10 @@ class SuiteTimeLintSpec extends AnyFunSuite {
     // load-9 sweep read 1.21 on the FAST box ≈ 1.5× that on this one.
     // Bench.scala refuses to write a file of record that fails this
     // same test (relative AND absolute, one shared ceiling constant),
-    // that lost > 3% of the machine to steal over its timed loop, in
-    // which a query over the budget below lost > 3% to steal in its
-    // own window, or in which any span of adjacent queries one budget
-    // long lost > 3% (the burst rules, `Bench.contention`). So every
+    // that lost > 3% of the machine to steal over its timed loop, or
+    // in which any span of adjacent queries one budget long lost > 3%
+    // (the burst rule, `Bench.contention`; a query over the budget is
+    // such a span by itself). So every
     // query this lint can flag in a map admitted under those rules
     // lost at most 3% of the machine to steal while it was timed.
     assume(mean <= 1.15 * speed && mean <= Bench.contendedMeanCeiling,
