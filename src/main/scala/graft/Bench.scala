@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Per-task metric accumulation for the timed loop: max task peak
   * execution memory and total spill bytes since the last reset. The
@@ -134,31 +133,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // SPARK_GRAFT_STATE_PROVIDER=rocksdb runs every stateful stream
-    // under the RocksDB state store — the 100 TB provider (state
-    // off-heap/on-disk per partition; RocksDbStateSpec pins provider
-    // equivalence). Measured at sf0.1 the default in-memory provider
-    // is faster (tiny state, JNI+disk overhead dominates), so the
-    // bench default stays HDFS-backed; the switch exists so the
-    // crossover is one env var to measure, not a code change.
-    if (sys.env.get("SPARK_GRAFT_STATE_PROVIDER").contains("rocksdb"))
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    // sketch queries (q17/q50) carry exact-companion audit columns for
-    // the correctness artifact; the bench times the sketch path alone —
-    // at scale the sketch REPLACES the exact shuffle/sort, so timing
-    // both would measure the thing the operator exists to avoid.
-    // The emitted JSON records this ("sketch_audit") so the artifact
-    // itself says which plan variant was timed.
-    spark.conf.set("spark.graft.sketchAudit", "false")
+    val cpus = Session.cpus
+    val spark = Session.bench(cpus)
     val sketchAudit = spark.conf.get("spark.graft.sketchAudit")
     // co-tenancy guard: a bench run sharing the machine with another
     // pipeline stage reports inflated wall times with nothing in the
@@ -227,10 +203,8 @@ object Bench {
     warm("stream-stream-join")(graft.streaming.StreamStreamJoin
       .purchaseViewPairs(spark, warmDir).count())
     // local iteration only (driver never sets it): bench a subset
-    val only: Option[Set[String]] =
-      sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").toSet)
-    def wanted(name: String): Boolean =
-      only.forall(_.exists(p => name == p || name.startsWith(p)))
+    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
+    val wanted = SparkEntry.picks(only) _
     // full UNTIMED pass before the timed loop: per-query codegen
     // classes compile (the compile cache then hits on the timed run)
     // and the shared exec paths reach C2 steady state. A fresh one-
@@ -367,7 +341,7 @@ object Bench {
     val nCores = Runtime.getRuntime.availableProcessors()
     if (fileOfRecord) {
       val why = contention(results, stealSec, wallSec, nCores)
-      val name = recordName(why.isDefined, cpus, nCores)
+      val name = recordName(why.isDefined, cpus.toString, nCores)
       why match {
         case Some(reason) =>
           System.err.println(s"[bench] contention detected ($reason) — " +

@@ -21,6 +21,12 @@ object SparkEntry {
       graft.queries.OperatorQueries.queries ++
       graft.queries.HybridQueries.queries ++
       graft.queries.OpsQueries.queries
+  /** The query-name filter of Bench, Verify and Inspect: `only` is a
+    * comma-separated list of names or name prefixes ("q85,q94" picks
+    * q85_… and q94_…; a full name picks itself), and None picks every
+    * query. */
+  def picks(only: Option[String])(name: String): Boolean =
+    only.forall(_.split(",").exists(name.startsWith))
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =

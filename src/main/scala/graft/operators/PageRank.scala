@@ -110,10 +110,11 @@ object PageRank {
     *
     * @param bcastRanks broadcast the per-source contribution vector
     *   into the per-iteration edge join (under the measured size
-    *   gate); false = shuffle join. Exposed for the PerfAB probe —
-    *   results are bit-identical on every path (the fixed-point
-    *   cross-edge sum is order-independent), only the join strategy
-    *   changes.
+    *   gate); false = shuffle join, the path a graph over the gate's
+    *   2M nodes takes. PageRankSpec sets it false to pin that path on
+    *   small graphs: results are bit-identical on every path (the
+    *   fixed-point cross-edge sum is order-independent), only the
+    *   join strategy changes.
     * @param bcastContribs same for the contribution aggregate in the
     *   rank-update join. */
   def run(edges: DataFrame, src: String, dst: String, iters: Int,

@@ -79,8 +79,8 @@ object YearRangeRewrite extends Rule[LogicalPlan] {
     }
 }
 
-/** `SparkSession.builder().withExtensions(new GraftExtensions)` or
-  * `--conf spark.sql.extensions=graft.plans.GraftExtensions`. */
+/** `--conf spark.sql.extensions=graft.plans.GraftExtensions`, or
+  * `withExtensions(new GraftExtensions)` on a session builder. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
     e.injectOptimizerRule(_ => YearRangeRewrite)

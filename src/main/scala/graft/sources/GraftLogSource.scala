@@ -692,7 +692,11 @@ object GraftLog {
     * and, for bucketed layouts, its bucket value. */
   case class ShardInfo(file: String, stats: Option[(Long, Long, Long)],
       ub: Option[Long] = None) {
-    def bytes: Long = Files.size(Paths.get(file))
+    /** Size of the listed content: a structural commit landing after
+      * the listing moves the shard to the retired store, and the
+      * maintenance ops that bin by size (optimize) or echo it into a
+      * deletion vector still see the bytes they listed. */
+    def bytes: Long = throughRetired(file)(Files.size)
   }
 
   /** Name of the pending-swap manifest — the commit point of every
@@ -992,9 +996,12 @@ object GraftLog {
     val tmp = Paths.get(path, HistoryDir,
       s".g$g.names.tmp.${java.util.UUID.randomUUID().toString.take(8)}")
     Files.write(tmp, names.mkString("\n").getBytes(StandardCharsets.UTF_8))
-    try Files.move(tmp, f, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    catch { case _: java.nio.file.FileSystemException =>
-      Files.deleteIfExists(tmp) } // lost the race: equal content won
+    // exclusive, not a rename: two racers can both pass the exists
+    // check, and the slower one may list AFTER the faster one began
+    // retiring this generation's shards — a rename would replace the
+    // full listing with that shorter one, and every token of `g` past
+    // it would stop resolving
+    publishExclusive(tmp, f)
   }
 
   /** Move a superseded shard (+ sidecar) into the retired store of
@@ -2635,20 +2642,24 @@ object GraftLog {
       .map(_.resolve(name)).find(Files.exists(_))).getOrElse(p)
   }
 
-  /** Open a shard's lines with the retired-store fallback AND a
-    * bounded retry: exists-check→open is not atomic, so a structural
-    * commit can move the file in the window — the retry re-resolves
-    * against the completed move. A truly vacuumed file still fails
-    * loudly on the last attempt. */
-  private[sources] def openShardLines(file: String)
-      : java.util.stream.Stream[String] = {
-    var attempt = 0
-    while (attempt < 2) {
-      try return Files.lines(withRetiredFallback(file))
-      catch { case _: java.nio.file.NoSuchFileException => attempt += 1 }
-    }
-    Files.lines(withRetiredFallback(file))
+  /** Apply `f` to a shard (or dv sidecar) at its live path, falling
+    * back to the retired store AND retrying: resolve→open is not
+    * atomic, so a structural commit can move the file in the window —
+    * the retry re-resolves against the completed move. A live file
+    * costs one call (scan planning sizes every shard); a truly
+    * vacuumed file still fails loudly on the last attempt. */
+  private[sources] def throughRetired[A](file: String)(
+      f: java.nio.file.Path => A): A = {
+    def go(attempt: Int): A =
+      try f(if (attempt == 0) Paths.get(file) else withRetiredFallback(file))
+      catch { case _: java.nio.file.NoSuchFileException if attempt < 2 =>
+        go(attempt + 1) }
+    go(0)
   }
+
+  /** A shard's lines, opened [[throughRetired]]. */
+  private[sources] def openShardLines(file: String)
+      : java.util.stream.Stream[String] = throughRetired(file)(Files.lines)
 
   /** [[openShardLines]]' fully-materialized sibling for the
     * maintenance tasks (optimize bins, dense-merge rewrites,
@@ -2656,16 +2667,9 @@ object GraftLog {
     * must survive a racing rewrite the same way; their COMMIT then
     * revalidates the generation and retries, so reading the retired
     * (= listed-snapshot) content is exactly right. */
-  private[sources] def readShardLines(file: String): Seq[String] = {
-    var attempt = 0
-    while (attempt < 2) {
-      try return Files.readAllLines(withRetiredFallback(file),
-        StandardCharsets.UTF_8).asScala.toSeq
-      catch { case _: java.nio.file.NoSuchFileException => attempt += 1 }
-    }
-    Files.readAllLines(withRetiredFallback(file),
-      StandardCharsets.UTF_8).asScala.toSeq
-  }
+  private[sources] def readShardLines(file: String): Seq[String] =
+    throughRetired(file)(Files.readAllLines(_, StandardCharsets.UTF_8))
+      .asScala.toSeq
 
   /** Suppressed keys of a dv file (sorted; the echo line skipped).
     * Executor-side: a dv is a few KB, read once per task; reads

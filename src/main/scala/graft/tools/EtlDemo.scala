@@ -2,9 +2,7 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
-import graft.Pipeline
+import graft.{Pipeline, Session}
 import graft.serve.QueryRegistry
 
 /** Drives the full medallion pipeline end-to-end on sample CSVs:
@@ -15,15 +13,7 @@ object EtlDemo {
   def main(args: Array[String]): Unit = {
     val work = Paths.get(args.headOption.getOrElse(
       Files.createTempDirectory("graft-etl-demo").toString))
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .appName("graft-etl-demo")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
 
     val landing = work.resolve("landing")
     Files.createDirectories(landing)

@@ -1,5 +1,6 @@
 package org.apache.spark.sql.graftshim
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic.{Dataset => ClassicDataset, SparkSession => ClassicSparkSession}
@@ -14,4 +15,12 @@ import org.apache.spark.sql.classic.{Dataset => ClassicDataset, SparkSession => 
 object GraftDataset {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     ClassicDataset.ofRows(spark.asInstanceOf[ClassicSparkSession], plan)
+}
+
+/** Bridge to the `private[spark]` listener bus: listener events (job
+  * ends, query-execution callbacks) arrive asynchronously, so a tool
+  * reading what its listeners recorded after an action first waits
+  * until every event posted so far has been handled. */
+object ListenerBus {
+  def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 }

@@ -252,6 +252,43 @@ class GraftLogConcurrencySpec extends SparkSuite {
     }
   }
 
+  test("compact ∥ range delete ∥ dv delete ∥ optimize ∥ append: every " +
+      "structural loser retries and the final state is EXACT") {
+    (0 until 3).foreach { round =>
+      val dir = tmpDir("glog-conc").toString
+      feed(0, 1000).write.format(fmt).mode("append")
+        .option("shards", 10).save(dir)
+      val work = Seq(
+        Future { GraftLog.compact(spark, dir, 4) },
+        Future { GraftLog.deleteWhere(dir, 200L, 299L) },
+        Future { GraftLog.deleteVectors(dir, Seq(501L, 502L, 503L)) },
+        Future { GraftLog.optimize(spark, dir, 1L << 20) },
+        Future { append(dir, 5000L, 5100L) })
+      Await.result(Future.sequence(work), 180.seconds)
+      val got = ids(dir)
+      val want = ((0L until 1000L)
+        .filterNot(i => i >= 200L && i <= 299L)
+        .filterNot(Set(501L, 502L, 503L)) ++ (5000L until 5100L)).sorted
+      assert(got.distinct.size === got.size, s"round $round: duplicated ids")
+      assert(got === want, s"round $round: the range is gone, the dv keys " +
+        "are suppressed, the appended rows are present")
+      assert(!listNames(dir).exists(_.endsWith(".tmp")),
+        s"round $round: no orphaned staging tmps")
+    }
+  }
+
+  test("a listed shard retired by a later commit still reports its " +
+      "size, as optimize's binning and dv echoes read it") {
+    val dir = tmpDir("glog-conc").toString
+    feed(0, 200).write.format(fmt).mode("append")
+      .option("shards", 2).save(dir)
+    val listed = GraftLog.listShards(dir)
+    val sizes = listed.map(_.bytes)
+    GraftLog.deleteWhere(dir, 0L, 99L) // retires the first shard
+    assert(!Files.exists(Paths.get(listed.head.file)))
+    assert(listed.map(_.bytes) === sizes)
+  }
+
   test("compact ∥ compact converge: one retries, rows bit-stable") {
     val dir = tmpDir("glog-conc").toString
     feed(0, 1000).write.format(fmt).mode("append")

@@ -7,24 +7,13 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** One SparkSession for the whole test JVM (guide: one per suite via
   * lazy val; a process-wide singleton is cheaper still and safe —
-  * getOrCreate returns the same session). */
+  * getOrCreate returns the same session). `Session.local` registers
+  * functions and extensions up front: individual tests must not
+  * depend on an earlier test having read a table (which registers as
+  * a side effect) — `testOnly X -- -z <one test>` runs in isolation
+  * too. */
 object SparkSuite {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    // register up front: individual tests must not depend on an
-    // earlier test having read a table (which registers as a side
-    // effect) — `testOnly X -- -z <one test>` runs in isolation too
-    graft.functions.GraftFunctions.register(s)
-    graft.plans.GraftExtensions.install(s)
-    s
-  }
+  lazy val spark: SparkSession = Session.local(4)
 }
 
 abstract class SparkSuite extends AnyFunSuite {
