@@ -206,8 +206,9 @@ object OperatorQueries {
 
     // Iterative graph operator: 3-iteration PageRank over the
     // bipartite customer↔supplier purchase graph (both directions, so
-    // the walk alternates sides). Each iteration is one src-join +
-    // one dst-aggregate — the Pregel shape. Deterministic across
+    // the walk alternates sides). Its ~16k-node rank vector fits the
+    // broadcast budget, so each iteration is one shuffle-free job over
+    // the cached edge arrays (operators.PageRank). Deterministic across
     // engines because divisions happen in double (IEEE
     // correctly-rounded) and cross-edge sums in decimal (exact);
     // the oracle replays all three iterations as chained CTEs.
@@ -314,8 +315,8 @@ object OperatorQueries {
     // decided by the portable salted hash of the UNDIRECTED pair (so
     // both walk directions agree and the DuckDB oracle replays the
     // identical sample), then run the same 3-iteration PageRank on
-    // the kept edges. Every per-iteration cost (src-join, dst-
-    // aggregate, rank-vector checkpoint) shrinks with p — the knob a
+    // the kept edges. Every per-iteration cost (routing each kept
+    // edge's contribution) shrinks with p — the knob a
     // 100 TB web-graph run actually turns; sampled PageRank preserves
     // the rank ORDERING of well-connected nodes (what consumers rank
     // by), and the top-20 is the consumer view. Exact companion +

@@ -2,19 +2,22 @@ package graft
 
 import scala.util.Random
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.Cast
 import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, DoubleType}
+import org.apache.spark.sql.graftshim.ListenerBus
+import org.apache.spark.sql.types.{DecimalType, DoubleType, IntegerType}
 
 import graft.operators.PageRank
 
 /** PageRank's node-side kernel (per-source contribution as an
   * unscaled long, long sum on `dst`) against the per-edge formula it
   * replaces: ranks must be BIT-identical on every graph shape the
-  * registry feeds it, on both join strategies. */
+  * registry feeds it, on both executions — the driver vector and the
+  * shuffle joins a graph past the broadcast budget takes. */
 class PageRankSpec extends SparkSuite {
   import spark.implicits._
 
@@ -68,12 +71,54 @@ class PageRankSpec extends SparkSuite {
     rnd.shuffle(core ++ dups ++ loops ++ danglingSources ++ dstOnly ++ island)
   }
 
-  for (seed <- Seq(1L, 7L, 42L); bcast <- Seq(true, false)) {
-    test(s"bit-identical to the per-edge reference (seed $seed, " +
-        s"broadcast ${if (bcast) "on" else "off"})") {
+  /** Both executions of the kernel: broadcast on, the driver vector
+    * under the session's default budget; broadcast off (−1), the
+    * shuffle joins a graph past the budget takes. The second element
+    * is the threshold to set (None: leave the default). */
+  private val paths = Seq("broadcast on" -> None, "broadcast off" -> Some(-1L))
+
+  /** Name suffix of a both-path test: none for the default path. */
+  private def on(budget: Option[Long]): String =
+    if (budget.isEmpty) "" else " (broadcast off)"
+
+  /** Runs `f` with `spark.sql.autoBroadcastJoinThreshold` at `bytes`
+    * (None: unchanged), restoring the previous value afterwards. */
+  private def withBudget[A](bytes: Option[Long])(f: => A): A = {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.getOption(key)
+    bytes.foreach(b => spark.conf.set(key, b.toString))
+    try f
+    finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
+  /** Jobs started and stages that wrote shuffle output while `f` ran. */
+  private def census[A](f: => A): (A, Int, Int) = {
+    val sc = spark.sparkContext
+    val jobs, shuffleStages = new java.util.concurrent.atomic.AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+      override def onStageCompleted(s: SparkListenerStageCompleted): Unit =
+        if (s.stageInfo.taskMetrics.shuffleWriteMetrics.recordsWritten > 0)
+          shuffleStages.incrementAndGet()
+    }
+    ListenerBus.drain(sc)
+    sc.addSparkListener(l)
+    try {
+      val a = f
+      ListenerBus.drain(sc)
+      (a, jobs.get, shuffleStages.get)
+    } finally sc.removeSparkListener(l)
+  }
+
+  for (seed <- Seq(1L, 7L, 42L); (path, budget) <- paths) {
+    test(s"bit-identical to the per-edge reference (seed $seed, $path)") {
       val edges = shapedGraph(seed).toDF("src", "dst")
-      val got = PageRank.run(edges, "src", "dst", iters = 5,
-        bcastRanks = bcast, bcastContribs = bcast)
+      val got = withBudget(budget)(
+        PageRank.run(edges, "src", "dst", iters = 5))
       assert(got.columns.toSeq === Seq("node", "rank"))
       val want = bits(perEdge(edges, iters = 5))
       assert(want.nonEmpty)
@@ -81,32 +126,97 @@ class PageRankSpec extends SparkSuite {
     }
   }
 
-  test("bit-identical to the per-edge reference on q100's edge shape") {
-    val li = Tables.table(spark, sf0001, "lineitem")
-      .select($"l_orderkey", $"l_suppkey")
-    val ords = Tables.table(spark, sf0001, "orders")
-      .select($"o_orderkey", $"o_custkey")
-    val pairs = li.join(ords, $"l_orderkey" === $"o_orderkey")
-      .select($"o_custkey".as("cust"), ($"l_suppkey" + 1000000L).as("supp"))
-    val edges = pairs.select($"cust".as("src"), $"supp".as("dst"))
-      .union(pairs.select($"supp".as("src"), $"cust".as("dst")))
-    assert(bits(PageRank.run(edges, "src", "dst", iters = 3)) ===
-      bits(perEdge(edges, iters = 3)))
+  for ((_, budget) <- paths) {
+    test(s"bit-identical to the per-edge reference on q100's edge shape${on(budget)}") {
+      val li = Tables.table(spark, sf0001, "lineitem")
+        .select($"l_orderkey", $"l_suppkey")
+      val ords = Tables.table(spark, sf0001, "orders")
+        .select($"o_orderkey", $"o_custkey")
+      val pairs = li.join(ords, $"l_orderkey" === $"o_orderkey")
+        .select($"o_custkey".as("cust"), ($"l_suppkey" + 1000000L).as("supp"))
+      val edges = pairs.select($"cust".as("src"), $"supp".as("dst"))
+        .union(pairs.select($"supp".as("src"), $"cust".as("dst")))
+      assert(bits(withBudget(budget)(PageRank.run(edges, "src", "dst",
+        iters = 3))) === bits(perEdge(edges, iters = 3)))
+    }
+
+    test(s"an empty edge list returns an empty (node, rank) frame${on(budget)}") {
+      val edges = Seq.empty[(Long, Long)].toDF("src", "dst")
+      val got = withBudget(budget)(PageRank.run(edges, "src", "dst", iters = 3))
+      assert(got.columns.toSeq === Seq("node", "rank"))
+      assert(got.count() === 0)
+    }
+
+    test(s"iters = 0 returns the uniform 1/N vector${on(budget)}") {
+      val edges = shapedGraph(5L).toDF("src", "dst")
+      val n = edges.select($"src".as("v")).union(edges.select($"dst"))
+        .distinct().count()
+      val got = withBudget(budget)(PageRank.run(edges, "src", "dst", iters = 0))
+      assert(got.count() === n)
+      assert(got.select($"rank").as[Double].collect().toSet === Set(1.0 / n))
+    }
+
+    test(s"int ids keep IntegerType and rank as long ids do${on(budget)}") {
+      val g = shapedGraph(11L)
+      val ints = g.map { case (s, d) => (s.toInt, d.toInt) }.toDF("src", "dst")
+      val got = withBudget(budget)(PageRank.run(ints, "src", "dst", iters = 4))
+      assert(got.schema("node").dataType === IntegerType)
+      assert(bits(got) === bits(PageRank.run(g.toDF("src", "dst"), "src",
+        "dst", iters = 4)))
+    }
   }
 
-  test("an empty edge list returns an empty (node, rank) frame") {
-    val edges = Seq.empty[(Long, Long)].toDF("src", "dst")
-    val got = PageRank.run(edges, "src", "dst", iters = 3)
-    assert(got.columns.toSeq === Seq("node", "rank"))
-    assert(got.count() === 0)
+  test("null endpoints rank the same on both paths") {
+    val g = shapedGraph(13L).map { case (s, d) =>
+      (Option(s), Option(d)) } ++ Seq((None, Some(3L)), (Some(4L), None),
+      (Some(4L), None), (None, None), (Some(600L), None))
+    val edges = g.toDF("src", "dst")
+    def rows(df: DataFrame) =
+      df.as[(Option[Long], Double)].collect()
+        .map { case (v, r) => v -> java.lang.Double.doubleToRawLongBits(r) }
+        .sorted.toSeq
+    val Seq(driver, shuffle) = paths.map { case (_, budget) =>
+      rows(withBudget(budget)(PageRank.run(edges, "src", "dst", iters = 4)))
+    }
+    assert(driver.exists(_._1.isEmpty))
+    assert(driver === shuffle)
+  }
+
+  test("a tiny budget sends a multi-partition graph down the shuffle path") {
+    val edges = shapedGraph(17L).toDF("src", "dst").repartition(4)
+    def shuffleStages(iters: Int) = withBudget(Some(64L))(
+      census(PageRank.run(edges, "src", "dst", iters))._3)
+    assert(shuffleStages(3) > shuffleStages(1),
+      "the shuffle path shuffles in every iteration")
+    assert(bits(withBudget(Some(64L))(PageRank.run(edges, "src", "dst",
+      iters = 3))) === bits(perEdge(edges, iters = 3)))
+  }
+
+  test("each driver-vector iteration is one job with no shuffle") {
+    val edges = shapedGraph(19L).toDF("src", "dst").repartition(4)
+    val (_, j1, s1) = census(PageRank.run(edges, "src", "dst", iters = 1))
+    val (_, j4, s4) = census(PageRank.run(edges, "src", "dst", iters = 4))
+    assert(j4 - j1 === 3, s"jobs: $j1 for one iteration, $j4 for four")
+    assert(s4 === s1, "no shuffle inside the iterations")
+  }
+
+  test("the driver vector leaves nothing cached") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val got = PageRank.run(shapedGraph(23L).toDF("src", "dst"), "src",
+      "dst", iters = 3)
+    assert(sc.getPersistentRDDs.keySet === before)
+    assert(got.count() > 0)
+    assert(sc.getPersistentRDDs.keySet === before)
   }
 
   test("the iteration keeps decimal casts and degrees off the edge list") {
-    val g = PageRank.graph(shapedGraph(3L).toDF("src", "dst"), "src", "dst")
+    val g = PageRank.graph(
+      PageRank.edgeList(shapedGraph(3L).toDF("src", "dst"), "src", "dst"))
     assert(g.e.columns.toSeq === Seq("src", "dst"),
       "the checkpointed edge list carries only (src, dst)")
     val plan = PageRank.step(g, g.nodes.withColumn("rank", lit(1.0 / g.n)),
-      damping = 0.85, bcastRanks = true, bcastContribs = true)
+      damping = 0.85)
       .queryExecution.optimizedPlan
     def scansEdges(p: LogicalPlan): Boolean = p.exists {
       case r: LogicalRDD => r.output.map(_.name) == Seq("src", "dst")

@@ -74,14 +74,14 @@ class SessionSpec extends SparkSuite {
     assert(Files.readString(out.resolve(s"$name.txt")) === plan)
   }
 
-  test("plans on q100 captures an executed plan per PageRank iteration") {
+  test("plans on q75 captures an executed plan per label round") {
     val out = tmpDir("inspect-plans")
-    val Seq((_, actions)) = Inspect.plans(spark, Seq("q100_pagerank"),
+    val Seq((_, actions)) = Inspect.plans(spark, Seq("q75_dedup_clusters"),
       sf0001, Some(out.toString))
-    // q100 runs 3 iterations, each pinned by a localCheckpoint action
+    // connected components pins every label round with a localCheckpoint
     assert(actions.count(_._1 == "localCheckpoint") >= 3, actions.map(_._1))
     assert(actions.last._1 === "count")
-    assert(Files.exists(Paths.get(out.toString, "q100_pagerank.txt")))
+    assert(Files.exists(Paths.get(out.toString, "q75_dedup_clusters.txt")))
   }
 
   test("profile reports the measured rep's jobs and the gap between them") {

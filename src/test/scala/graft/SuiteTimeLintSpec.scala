@@ -22,7 +22,8 @@ class SuiteTimeLintSpec extends AnyFunSuite {
   private val whitelist: Map[String, String] = Map(
     "q107_triangle_count" -> ("exact Schank-Wagner wedge enumeration — " +
       "super-linear with density by nature; sub-linear twin is q224"),
-    "q100_pagerank" -> ("3 full-edge iterations, the exactness " +
+    "q100_pagerank" -> ("3 full-edge iterations (one shuffle-free " +
+      "job each over the cached edge arrays), the exactness " +
       "baseline; sub-linear twin is q308"),
     "q227_label_prop" -> ("3 rounds x |E| vote shuffle — the " +
       "iterative superstep floor for this graph"),
@@ -32,9 +33,9 @@ class SuiteTimeLintSpec extends AnyFunSuite {
       "budget; at 100 TB each round is one linear pass and the " +
       "log-round bound is the point"),
     "q308_pagerank_doulion" -> ("4.2 s on a quiet machine; 3 " +
-      "iterations x (join + agg + checkpoint) on the sampled edges " +
-      "is iteration-overhead bound and load-sensitive around the " +
-      "threshold"),
+      "iterations (one job each) on the sampled edges plus their " +
+      "dedup and node collect is job-overhead bound and " +
+      "load-sensitive around the threshold"),
     "q342_cdc_replication" -> ("4.3-7.5 s across quiet runs: three " +
       "standard-SQL MERGE applies (delta-based merge-on-read as of " +
       "r13 — ×50 cost halved 29.6→15.9 s, but each is still a " +

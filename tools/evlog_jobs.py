@@ -5,9 +5,11 @@ driver gaps between them, per SQL execution and per operation.
 Usage: zstd -dc <eventlog dir>/events_1_* | python3 tools/evlog_jobs.py
 
 Each job is labelled with the description of the SQL execution it ran
-under (`spark.sql.execution.id` -> SparkListenerSQLExecutionStart); a job
-outside any execution (Spark's parquet footer read, for one) reads
-"(no SQL execution)". An operation ends with its first
+under (`spark.sql.execution.id` -> SparkListenerSQLExecutionStart). A job
+outside any execution is labelled with the name of its result stage, the
+call site of the action that ran it: `parquet at Tables.scala:37` for
+Spark's parquet footer read, `treeAggregate at PageRank.scala:...` for a
+PageRank iteration. An operation ends with its first
 `collect at Workloads.scala` execution, the call lakebench ends every
 operation with; a log from another driver prints as one operation.
 
@@ -41,8 +43,12 @@ def main():
         ev = e["Event"]
         if ev == "SparkListenerJobStart":
             props = e.get("Properties") or {}
+            # the result stage is created after its parents: highest id
+            stages = sorted(e.get("Stage Infos") or [],
+                            key=lambda s: s["Stage ID"])
+            site = stages[-1]["Stage Name"] if stages else "(no stage)"
             jobs[e["Job ID"]] = [e["Submission Time"], e["Submission Time"],
-                                 props.get("spark.sql.execution.id")]
+                                 props.get("spark.sql.execution.id"), site]
         elif ev == "SparkListenerJobEnd":
             jobs[e["Job ID"]][1] = e["Completion Time"]
         elif ev.endswith("SQLExecutionStart"):
@@ -51,8 +57,8 @@ def main():
 
     ops, op = [], []
     for jid in sorted(jobs):
-        t0, t1, x = jobs[jid]
-        label = execs.get(x, "") if x else "(no SQL execution)"
+        t0, t1, x, site = jobs[jid]
+        label = execs.get(x, "") if x else site
         op.append((t0, t1, label))
         last_of_exec = jobs.get(jid + 1, [0, 0, None])[2] != x
         if OP_END.match(label) and last_of_exec:
