@@ -52,6 +52,12 @@ import org.apache.spark.unsafe.types.UTF8String
   *    probe-id set under AQE, unreachable shards are dropped at
   *    executed-stage planning — dynamic partition pruning over the
   *    same sidecar ranges.
+  *  - **point reads on the driver**: an exact one-key lookup
+  *    (`event_id = k`) whose planned shards fit
+  *    `spark.sql.autoBroadcastJoinThreshold` builds a DSv2 LocalScan
+  *    over the same partitions and readers, so Spark plans a
+  *    LocalTableScan and the lookup runs no job at all; a threshold
+  *    of -1 keeps every read on the BatchScan.
   *  - **limit / top-n pushdown**: LIMIT n opens only shards covering
   *    n rows (sidecar counts); ORDER BY event_id [DESC] LIMIT n opens
   *    only the head (tail) shards when the sidecar ranges are
@@ -5322,8 +5328,10 @@ class GraftLogScanBuilder(path: String,
     * drop every line outside the interval — so they are not returned
     * and Spark plans no Filter for them: the generated code then
     * carries no key literal, and one compiled class serves every
-    * lookup. Everything else (OR, IN, IsNotNull, non-Long values,
-    * indexed non-key columns) stays a residual that Spark re-applies
+    * lookup. A lookup of one key whose planned shards fit the
+    * broadcast budget is then read on the driver ([[build]]).
+    * Everything else (OR, IN, IsNotNull, non-Long values, indexed
+    * non-key columns) stays a residual that Spark re-applies
     * row-level, as does every filter of a rewrite or change-feed
     * scan (see `exactKeys`). */
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
@@ -5390,11 +5398,68 @@ class GraftLogScanBuilder(path: String,
       true
     }
 
-  override def build(): Scan =
-    new GraftLogScan(path, view, pushed, exactKeys, required,
+  /** The [[GraftLogScan]] for the pushed state — wrapped in a
+    * [[GraftLogLocalScan]] when it is a point read within the
+    * broadcast budget (see [[readsOnDriver]]), so Spark plans a
+    * LocalTableScan and `collect` starts no job; every other read
+    * (ranges, aggregates, LIMIT/top-n, bucketed, streaming, rewrite
+    * and change-feed scans, point reads past the budget) is the
+    * BatchScan itself. */
+  override def build(): Scan = {
+    val scan = new GraftLogScan(path, view, pushed, exactKeys, required,
       maxShardsPerTrigger, pushedAgg, pushedLimit, pushedTopN, onPlan,
       version, sinceVersion, changeFeed, maxCommitsPerTrigger,
       ignoreDeletes)
+    if (readsOnDriver(scan)) new GraftLogLocalScan(scan) else scan
+  }
+
+  /** A point read — the scan answers one exact key (`lo == hi`), no
+    * aggregate was pushed, and it is no rate-limited stream — whose
+    * planned shards' bytes fit `spark.sql.autoBroadcastJoinThreshold`
+    * (negative: never) and that reports no key-grouped partitioning
+    * a storage-partitioned join could use. Its rows are then at most
+    * a broadcast's worth, cheaper to read on the driver than to
+    * schedule a job for. */
+  private def readsOnDriver(scan: GraftLogScan): Boolean = {
+    val budget = org.apache.spark.sql.internal.SQLConf.get
+      .autoBroadcastJoinThreshold
+    exactKeys && pushedAgg.isEmpty && maxShardsPerTrigger.isEmpty &&
+      budget >= 0 && {
+        val (lo, hi) = GraftLog.keyBounds(pushed)
+        lo == hi
+      } &&
+      scan.outputPartitioning().isInstanceOf[
+        org.apache.spark.sql.connector.read.partitioning.UnknownPartitioning] &&
+      scan.estimateStatistics().sizeInBytes().getAsLong <= budget
+  }
+}
+
+/** A point read answered on the driver: Spark's DataSourceV2Strategy
+  * plans a LocalTableScanExec over [[rows]], so `collect` returns
+  * them with no job, no task and no closure cleaning. The rows are
+  * the wrapped scan's own — its planned partitions (`onPlan` fires)
+  * through its reader factory, so the key interval, the deletion
+  * vectors at the view's generation and a pinned version's schema
+  * apply exactly as on an executor — read once per scan. Statistics
+  * are the wrapped scan's: without them a V2 relation prices at the
+  * conf default, and a point read on one side of a join would stop
+  * broadcasting. */
+class GraftLogLocalScan(scan: GraftLogScan) extends LocalScan
+    with SupportsReportStatistics {
+  private lazy val read: Array[InternalRow] = {
+    val factory = scan.createReaderFactory()
+    scan.planInputPartitions().flatMap { p =>
+      val r = factory.createReader(p)
+      try {
+        val out = Array.newBuilder[InternalRow]
+        while (r.next()) out += r.get().copy()
+        out.result()
+      } finally r.close()
+    }
+  }
+  override def rows(): Array[InternalRow] = read
+  override def readSchema(): StructType = scan.readSchema()
+  override def estimateStatistics(): Statistics = scan.estimateStatistics()
 }
 
 /** Observability at the DSv2 seam: per-task and driver-side custom

@@ -5,11 +5,14 @@ import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.execution.{ColumnarToRowExec, FilterExec, InputAdapter, SparkPlan, WholeStageCodegenExec}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.execution.{ColumnarToRowExec, FilterExec, InputAdapter, LocalTableScanExec, SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.ListenerBus
 
 import graft.sources.GraftLog
 
@@ -22,7 +25,10 @@ import graft.sources.GraftLog
   * bucketed layout, a pinned version, the row reader), the plan
   * shape, the compile count, LIMIT/top-n over a key-filtered scan,
   * range DELETEs at the Long edges, and that row-level rewrites
-  * (copy-on-write and delta) still read whole shards. */
+  * (copy-on-write and delta) still read whole shards. A one-key
+  * lookup within the broadcast budget reads on the driver (a
+  * LocalTableScan, no job); the point-read cases run on that path
+  * and, under a -1 budget, on the BatchScan, with identical rows. */
 class GraftLogExactKeySpec extends SparkSuite {
   import spark.implicits._
 
@@ -46,6 +52,11 @@ class GraftLogExactKeySpec extends SparkSuite {
     GraftLog.write(rows, dir, rowsPerShard = 50)
     dir
   }
+
+  private def frame(rs: Seq[(Long, Long, Long, String, Double)]): DataFrame =
+    rs.toDF("event_id", "ts_us", "user_id", "event_type", "value")
+      .select($"event_id", timestamp_micros($"ts_us").as("ts"), $"user_id",
+        $"event_type", $"value")
 
   private def asRow4(df: DataFrame): Seq[Row4] =
     df.select($"event_id", $"user_id", $"event_type", $"value")
@@ -140,10 +151,6 @@ class GraftLogExactKeySpec extends SparkSuite {
   test("bucketed and version-pinned reads apply the bounds exactly") {
     val rows = seededRows(17L)
     val preds = predicates(rows.map(_._1), 19L)
-    def frame(rs: Seq[(Long, Long, Long, String, Double)]) =
-      rs.toDF("event_id", "ts_us", "user_id", "event_type", "value")
-        .select($"event_id", timestamp_micros($"ts_us").as("ts"), $"user_id",
-          $"event_type", $"value")
     // bucketed: selecting ub plans whole-bucket partitions (the bucket
     // reader)
     val bdir = tmpDir("glog-xk-b").toString
@@ -199,16 +206,30 @@ class GraftLogExactKeySpec extends SparkSuite {
   private def filters(p: SparkPlan): Seq[FilterExec] =
     Plans.collect(p) { case f: FilterExec => f }
 
+  /** The plan's operators, codegen wrappers left out. */
+  private def operators(p: SparkPlan): Seq[Class[_]] =
+    Plans.collect(p) {
+      case _: WholeStageCodegenExec | _: InputAdapter => None
+      case o => Some(o.getClass)
+    }.flatten
+
+  /** The two plans of a point read: the default budget (read on the
+    * driver) and -1 (the BatchScan). */
+  private val paths = Seq("default budget" -> None, "budget -1" -> Some(-1L))
+
   test("a pure key predicate plans ColumnarToRow over the scan, no Filter") {
     val t = catalogTable(400, 4)
-    val plan = executed(spark.sql(s"SELECT value FROM $t WHERE event_id = 137"))
-    assert(filters(plan).isEmpty, plan)
-    val nodes = Plans.collect(plan) {
-      case _: WholeStageCodegenExec | _: InputAdapter => None
-      case p => Some(p)
-    }.flatten
-    assert(nodes.map(_.getClass) ===
-      Seq(classOf[ColumnarToRowExec], classOf[BatchScanExec]), plan)
+    val point = s"SELECT value FROM $t WHERE event_id = 137"
+    // within the broadcast budget the lookup is read on the driver
+    val local = executed(spark.sql(point))
+    assert(operators(local) === Seq(classOf[LocalTableScanExec]), local)
+    // broadcast off: the columnar BatchScan, still with no Filter
+    withBudget(Some(-1L)) {
+      val plan = executed(spark.sql(point))
+      assert(filters(plan).isEmpty, plan)
+      assert(operators(plan) ===
+        Seq(classOf[ColumnarToRowExec], classOf[BatchScanExec]), plan)
+    }
     for (q <- Seq(
         s"SELECT value FROM $t WHERE event_id >= 100 AND event_id < 150",
         s"SELECT value FROM $t WHERE event_id > 9223372036854775807")) {
@@ -235,14 +256,159 @@ class GraftLogExactKeySpec extends SparkSuite {
     def lookup(k: Long): Seq[Double] =
       spark.sql(s"SELECT value FROM $t WHERE event_id = $k").as[Double]
         .collect().toSeq
-    assert(lookup(3L) === Seq(3.0)) // warm: the one compile
-    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-    (1 to 20).foreach { i =>
-      val k = 17L * i
-      assert(lookup(k) === Seq((k % 100).toDouble), s"lookup $k")
+    for ((path, budget) <- paths) withBudget(budget) {
+      assert(lookup(3L) === Seq(3.0)) // warm: the one compile
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      (1 to 20).foreach { i =>
+        val k = 17L * i
+        assert(lookup(k) === Seq((k % 100).toDouble), s"$path: lookup $k")
+      }
+      val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+      assert(compiled <= 2, s"$path: $compiled compilations for 20 lookups")
     }
-    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
-    assert(compiled <= 2, s"$compiled compilations for 20 lookups")
+  }
+
+  // ---- point reads on the driver ----
+
+  /** `read`'s rows under both [[paths]], asserted identical. The
+    * default-budget plan scans through `scan` (-1 always plans the
+    * BatchScan); a Filter is planned on both iff `residual`. */
+  private def onBothPaths(what: String,
+      scan: Class[_] = classOf[LocalTableScanExec],
+      residual: Boolean = false)(read: => DataFrame): Seq[Row] = {
+    val got = paths.map { case (path, budget) =>
+      withBudget(budget) {
+        val df = read
+        val rows = df.collect().toSeq.sortBy(_.toString)
+        val plan = Plans.stripAQEPlan(df.queryExecution.executedPlan)
+        val scans = Plans.collect(plan) {
+          case s: LocalTableScanExec => s.getClass
+          case s: BatchScanExec => s.getClass
+        }
+        val want = if (budget.isEmpty) scan else classOf[BatchScanExec]
+        assert(scans === Seq(want), s"$what ($path)\n$plan")
+        assert(filters(plan).nonEmpty === residual, s"$what ($path)\n$plan")
+        rows
+      }
+    }
+    assert(got(0) === got(1), what)
+    got(0)
+  }
+
+  /** Jobs started while `f` ran. */
+  private def jobsDuring[A](f: => A): (A, Int) = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    ListenerBus.drain(sc)
+    sc.addSparkListener(l)
+    try {
+      val a = f
+      ListenerBus.drain(sc)
+      (a, jobs.get)
+    } finally sc.removeSparkListener(l)
+  }
+
+  test("point reads return the same rows on the driver and on the BatchScan") {
+    val rows = seededRows(31L)
+    val dir = writeLog(rows)
+    val read = () => spark.read.format(fmt).load(dir)
+    def lookup(k: Long, df: DataFrame = read()) =
+      df.filter($"event_id" === k).select($"value")
+    val value = rows.map(r => r._1 -> r._5).toMap
+    val ids = rows.map(_._1).filter(i => i > Long.MinValue && i < Long.MaxValue)
+    val Seq(k, gone, twice) = Seq(ids(17), ids(123), ids(250))
+    val absent = Iterator.iterate(k + 1)(_ + 1).find(!value.contains(_)).get
+
+    assert(onBothPaths("present")(lookup(k)) === Seq(Row(value(k))))
+    assert(onBothPaths("absent")(lookup(absent)).isEmpty)
+    assert(onBothPaths("Long.MaxValue")(lookup(Long.MaxValue)) ===
+      Seq(Row(value(Long.MaxValue))))
+    // a residual predicate keeps its Filter above either scan
+    assert(onBothPaths("residual kept", residual = true)(
+      lookup(k, read().filter($"value" >= value(k)))) === Seq(Row(value(k))))
+    assert(onBothPaths("residual dropped", residual = true)(
+      lookup(k, read().filter($"value" > value(k)))).isEmpty)
+    // an empty interval is no point read: a BatchScan with no shard
+    assert(onBothPaths("> max", scan = classOf[BatchScanExec])(
+      read().filter($"event_id" > Long.MaxValue).select($"value")).isEmpty)
+    val empty = executed(read().filter($"event_id" > Long.MaxValue))
+    assert(Plans.collect(empty) { case b: BatchScanExec =>
+      b.inputPartitions.size } === Seq(0), empty)
+
+    // a key written twice by two appends reads both rows; a version
+    // pinned before the second append reads the first only
+    val tok = GraftLog.currentVersion(dir)
+    frame(Seq((twice, 1700000000000001L, 1L, "t9", -7.25)))
+      .write.format(fmt).mode("append").save(dir)
+    assert(onBothPaths("written twice")(lookup(twice)) ===
+      Seq(Row(-7.25), Row(value(twice))).sortBy(_.toString))
+    val pinned = () => spark.read.format(fmt).option("version", tok).load(dir)
+    assert(onBothPaths("version-pinned")(lookup(twice, pinned())) ===
+      Seq(Row(value(twice))))
+
+    // a deletion vector suppresses the key on both paths; the token
+    // minted before the delete still reads it
+    GraftLog.deleteVectors(dir, Seq(gone))
+    assert(onBothPaths("dv-suppressed")(lookup(gone)).isEmpty)
+    assert(onBothPaths("dv neighbour")(lookup(k)) === Seq(Row(value(k))))
+    assert(onBothPaths("pinned before the dv")(lookup(gone, pinned())) ===
+      Seq(Row(value(gone))))
+
+    // the dv'd shard losing its sidecar fails the lookup by name on
+    // both paths, as any read of the table does
+    val dvShard = {
+      val s = Files.list(Paths.get(dir, "_dv"))
+      try s.iterator().asScala.map(_.getFileName.toString)
+        .filter(_.endsWith(".dv")).toSeq.min.takeWhile(_ != '.')
+      finally s.close()
+    }
+    Files.delete(Paths.get(dir, dvShard + ".meta"))
+    for ((path, budget) <- paths) withBudget(budget) {
+      val e = intercept[Exception](lookup(gone).collect())
+      val msgs = Iterator.iterate[Throwable](e)(_.getCause)
+        .takeWhile(_ != null).map(t => String.valueOf(t.getMessage)).toSeq
+      assert(msgs.exists(m => m.contains(dvShard) && m.contains("no sidecar")),
+        s"$path\n${msgs.mkString("\n")}")
+    }
+  }
+
+  test("a point read past the budget plans the BatchScan") {
+    val t = catalogTable(400, 4)
+    val q = s"SELECT value FROM $t WHERE event_id = 137"
+    assert(withBudget(Some(64L))(operators(executed(spark.sql(q)))) ===
+      Seq(classOf[ColumnarToRowExec], classOf[BatchScanExec]))
+    assert(withBudget(Some(64L))(spark.sql(q).as[Double].collect().toSeq) ===
+      Seq(37.0))
+  }
+
+  test("a point read on the driver starts no Spark job") {
+    val t = catalogTable(400, 4)
+    val q = s"SELECT value FROM $t WHERE event_id = 211"
+    val (local, localJobs) = jobsDuring(spark.sql(q).as[Double].collect().toSeq)
+    val (batch, batchJobs) = withBudget(Some(-1L))(
+      jobsDuring(spark.sql(q).as[Double].collect().toSeq))
+    assert(local === Seq(11.0) && batch === local)
+    assert(localJobs === 0)
+    assert(batchJobs >= 1) // the listener does count a BatchScan's job
+  }
+
+  test("a point read joined to a table past the budget is broadcast") {
+    val t = catalogTable(400, 4)
+    // 100 000 longs price at 800 kB: only the point read (one 4 kB
+    // shard, by the statistics the local scan reports) fits the budget
+    withBudget(Some(100000L)) {
+      val df = spark.sql(s"SELECT user_id, value FROM $t WHERE event_id = 137")
+        .join(spark.range(0, 100000).withColumnRenamed("id", "user_id"),
+          "user_id")
+      val plan = df.queryExecution.sparkPlan
+      assert(plan.collect { case j: BroadcastHashJoinExec => j }.size === 1, plan)
+      assert(plan.collect { case s: LocalTableScanExec => s }.size === 1, plan)
+      assert(df.as[(Long, Double)].collect().toSeq === Seq((4L, 37.0)))
+    }
   }
 
   test("LIMIT and top-n over a key-filtered scan return in-range rows") {

@@ -81,19 +81,6 @@ class PageRankSpec extends SparkSuite {
   private def on(budget: Option[Long]): String =
     if (budget.isEmpty) "" else " (broadcast off)"
 
-  /** Runs `f` with `spark.sql.autoBroadcastJoinThreshold` at `bytes`
-    * (None: unchanged), restoring the previous value afterwards. */
-  private def withBudget[A](bytes: Option[Long])(f: => A): A = {
-    val key = "spark.sql.autoBroadcastJoinThreshold"
-    val prev = spark.conf.getOption(key)
-    bytes.foreach(b => spark.conf.set(key, b.toString))
-    try f
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
-
   /** Jobs started and stages that wrote shuffle output while `f` ran. */
   private def census[A](f: => A): (A, Int, Int) = {
     val sc = spark.sparkContext

@@ -32,5 +32,20 @@ abstract class SparkSuite extends AnyFunSuite {
     p
   }
 
+  /** Runs `f` with `spark.sql.autoBroadcastJoinThreshold` at `bytes`
+    * (None: unchanged), restoring the previous value afterwards — the
+    * budget that picks between a driver-side and a distributed plan
+    * (PageRank's rank vector, GraftLog's point reads). */
+  def withBudget[A](bytes: Option[Long])(f: => A): A = {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.getOption(key)
+    bytes.foreach(b => spark.conf.set(key, b.toString))
+    try f
+    finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
   val sf0001 = "/root/testdata/sf0.001"
 }
